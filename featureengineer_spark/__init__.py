@@ -21,4 +21,10 @@ pandas UDFs — zero per-row Python in any hot path.
 
 __version__ = "0.1.0"
 
+from featureengineer_spark import _pyworker
 from featureengineer_spark.session import get_spark  # noqa: F401
+
+# Unpickling an engine UDF imports this package by reference, so every
+# reused Python worker is patched from its first engine task onward.
+if _pyworker.in_python_worker():
+    _pyworker.install()

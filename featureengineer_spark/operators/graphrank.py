@@ -31,8 +31,15 @@ capability the raw operator inventory lacks).
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from featureengineer_spark._log import log_event
+
+_log = logging.getLogger(__name__)
 
 
 def _release_local_checkpoint(df: DataFrame | None) -> None:
@@ -41,15 +48,22 @@ def _release_local_checkpoint(df: DataFrame | None) -> None:
     them (the blocks belong to the checkpointed RDD, not the cache
     manager), so a loop of checkpoints otherwise retains
     O(n_iter * |frame|) executor storage for the life of the job. Reaches
-    the RDD through the LogicalRDD plan node; best-effort (a Spark
-    version moving the private accessor degrades to the old
-    keep-everything behavior, never to an error)."""
+    the RDD through the analyzed plan's ``LogicalRDD`` node, a private
+    accessor: when the node is anything else or the accessor moved, the
+    blocks are kept (the old behavior, never an error) and one
+    structured log line says why."""
     if df is None:
         return
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # pragma: no cover - defensive
-        pass
+        plan = df._jdf.queryExecution().analyzed()
+        node = plan.nodeName()
+        if node == "LogicalRDD":
+            plan.rdd().unpersist(False)
+            return
+        reason = f"analyzed plan node is {node}, not LogicalRDD"
+    except (AttributeError, Py4JError) as e:
+        reason = f"{type(e).__name__}: {str(e)[:200]}"
+    log_event(_log, "graphrank_checkpoint_release_skipped", reason=reason)
 
 
 def pagerank(

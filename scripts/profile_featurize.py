@@ -1,24 +1,28 @@
-"""Decompose featurize wall time at a pinned core count: (a) JVM-only
-stat projection + local sort (no Python), (b) full featurize (Arrow
-boundary + numpy kernel), (c) a hashed-key variant that shrinks the
-string column crossing the Arrow boundary.
+"""Decompose featurize wall time on this host's cores: (a) JVM-only
+stat projection + local sort (no Python), (b) the same plan through an
+identity ``mapInArrow`` (the fixed per-task Python-worker floor plus
+Arrow transfer, no kernel), (c) full featurize (boundary + numpy
+kernel), (d) a hashed-key variant that shrinks the string column
+crossing the Arrow boundary. (c) - (b) is the kernel's own cost.
 
-Usage: taskset -c 0-31 python scripts/profile_featurize.py 32
-Input: the bucketed table from scripts/bench_scaling.py (built on
-first use). Findings are recorded in BENCH/BASELINE.md.
+Usage: python scripts/profile_featurize.py [cores]   (default: nproc)
+Input: the bucketed table of scripts/bench_scaling.py, built on first
+use (``SPARK_GRAFT_SCALE_CONVS`` shrinks it). Findings are recorded in
+BENCH/BASELINE.md.
 """
 import sys, time, json
 import os
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from bench_scaling import register_bucketed, data_path
+from bench_scaling import ensure_input, register_bucketed
 from featureengineer_spark import get_spark
-from featureengineer_spark.kernels import featurize_fast, FeatureModel
+from featureengineer_spark.kernels import featurize_fast
 
-cores = int(sys.argv[1])
+cores = int(sys.argv[1]) if len(sys.argv) > 1 else len(os.sched_getaffinity(0))
+ensure_input()
 spark = get_spark(master=f"local[{cores}]", shuffle_partitions=cores*2,
-                  app_name="fe-profile", extra_conf={"spark.local.dir": "/dev/shm/spark-tmp"})
+                  app_name="fe-profile")
 spark.sparkContext.setLogLevel("ERROR")
 t = register_bucketed(spark)
 n = t.count()
@@ -30,16 +34,16 @@ def timed(name, df, reps=2):
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         best = min(best, time.perf_counter() - t0)
-    print(json.dumps({"job": name, "sec": round(best,3), "turns_per_sec": round(n/best,1)}), flush=True)
+    print(json.dumps({"job": name, "cores": cores, "sec": round(best,3), "turns_per_sec": round(n/best,1)}), flush=True)
     return best
 
-# (a) JVM-only: the pre-kernel projection + local sort, no Python at all
+# (a) JVM-only: featurize_fast's pre-kernel projection + local sort, no Python
 text = F.coalesce(F.col("text"), F.lit(""))
 trimmed = F.trim(text)
 pre = t.select(
     "conv_id","turn_idx","ts",
     F.length(text).cast("double").alias("__text_len"),
-    F.when(F.length(trimmed)==0, F.lit(0)).otherwise(F.regexp_count(trimmed, F.lit(r"\s+"))+1).cast("double").alias("__n_words"),
+    F.when(F.length(trimmed)==0, F.lit(0)).otherwise(F.size(F.split(trimmed, r"\s+"))).cast("double").alias("__n_words"),
     (F.col("role")=="user").cast("double").alias("__is_user"),
     (F.col("role")=="assistant").cast("double").alias("__is_assistant"),
     (F.col("role")=="system").cast("double").alias("__is_system"),
@@ -47,12 +51,18 @@ pre = t.select(
 ).sortWithinPartitions("conv_id","ts","turn_idx")
 timed("jvm_scan_sort_only", pre)
 
-# (b) full featurize (string conv_id through Arrow)
+# (b) identity boundary over the same partitioning: one Python task per
+# bucket file, every batch sent and returned unchanged
+def identity(batches):
+    import featureengineer_spark  # noqa: F401  (as unpickling any engine UDF does)
+    yield from batches
+timed("arrow_identity_floor", pre.mapInArrow(identity, schema=pre.schema))
+
+# (c) full featurize (string conv_id through Arrow)
 timed("featurize_full", featurize_fast(t, clustered=True))
 
-# (c) string-free variant: conv_id replaced by xxhash64 BEFORE the kernel
+# (d) string-free variant: conv_id replaced by xxhash64 BEFORE the kernel
+# (cast to string keeps the kernel contract; isolates string size)
 t_hashed = t.withColumn("conv_id", F.xxhash64("conv_id").cast("string"))
-# cast to string keeps kernel contract; to isolate STRING size vs presence:
-t_hashed2 = t.withColumn("conv_id", F.xxhash64("conv_id"))
 timed("featurize_short_string_key", featurize_fast(t_hashed, clustered=True))
 spark.stop()

@@ -95,3 +95,34 @@ def test_pagerank_releases_iteration_checkpoints(spark):
     assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-9
     after = sc._jsc.sc().getPersistentRDDs().size()
     assert after - before <= 1, (before, after)
+
+
+def test_checkpoint_release_fallback_logs_and_keeps_ranks(spark, monkeypatch, caplog):
+    import json
+    import logging
+
+    edges = [((k * 7) % 23, (k * 13 + 5) % 29) for k in range(120)]
+    want = _run(spark, edges, n_iter=4)
+
+    # A Spark whose checkpointed frame no longer analyzes to a bare
+    # LogicalRDD: the release must fall back, say so, and not touch ranks.
+    frame_cls = type(spark.range(1))
+    stock = frame_cls.localCheckpoint
+    monkeypatch.setattr(
+        frame_cls, "localCheckpoint", lambda self, *a, **kw: stock(self, *a, **kw).select("*")
+    )
+    with caplog.at_level(logging.WARNING, logger="featureengineer_spark"):
+        got = _run(spark, edges, n_iter=4)
+
+    lines = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == "featureengineer_spark.operators.graphrank"
+    ]
+    assert len(lines) == 4  # one per released iteration
+    for line in lines:
+        assert line["event"] == "graphrank_checkpoint_release_skipped"
+        assert "Project" in line["reason"]
+    assert set(got) == set(want)
+    for node, r in want.items():
+        assert got[node] == pytest.approx(r, abs=1e-12)
