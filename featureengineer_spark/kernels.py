@@ -1,16 +1,18 @@
-"""Per-conversation vectorized feature kernel (grouped-map, Arrow).
+"""Per-turn vectorized feature kernel (segmented ``mapInArrow``).
 
 Graft of the reference's per-segment numpy kernels — posterior+stat0/stat1
 per segment with the UBM broadcast to every worker (``IVector.py:806-815``,
-``mpiIV.py:241,400``): here a per-conversation grouped-map pandas UDF that
-turns each turn into a fixed-dim ``feature_vec``, with the (small, dense)
-projection model held in a Spark broadcast variable, never a DataFrame.
+``mpiIV.py:241,400``): here :func:`featurize_fast` streams conv-sorted
+Arrow batches through one segmented numpy kernel that turns each turn
+into a fixed-dim ``feature_vec``, with the (small, dense) projection
+model held in a Spark broadcast variable, never a DataFrame.
 
 The kernel is leakage-safe: normalization is *expanding* (statistics over
 rows at-or-before the current turn only, under stable ``(ts, turn_idx)``
 ordering) — the transcript analog of the reference's ``cep[start:stop]``
-bound (``IVector.py:796-800``). Everything inside the kernel is whole-group
-numpy — zero per-row Python.
+bound (``IVector.py:796-800``). Everything inside the kernel is
+whole-batch numpy — zero per-row Python. ``oracle.oracle_features`` is
+its pandas reference.
 """
 
 from __future__ import annotations
@@ -18,21 +20,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 FEATURE_DIM = 8
-
-FEATURIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("feature_vec", T.ArrayType(T.DoubleType()), False),
-    ]
-)
 
 
 @dataclass
@@ -47,79 +39,6 @@ class FeatureModel:
         default_factory=lambda: np.random.default_rng(0).standard_normal(
             (FEATURE_DIM, FEATURE_DIM)
         )
-    )
-
-
-def raw_turn_stats(pdf: pd.DataFrame) -> np.ndarray:
-    """Per-turn raw statistics matrix (n_turns × 8), vectorized.
-
-    Columns: text_len, n_words, role one-hot (user/assistant/system/tool),
-    tool_notnull, inter_turn_gap_s. The transcript analog of the 39-dim
-    MFCC+Δ+ΔΔ frame vector (``IVector.py:928``).
-    """
-    text = pdf["text"].fillna("")
-    text_len = text.str.len().to_numpy(dtype=np.float64)
-    n_words = text.str.split().str.len().fillna(0).to_numpy(dtype=np.float64)
-    role = pdf["role"].to_numpy()
-    tool_notnull = pdf["tool"].notna().to_numpy(dtype=np.float64)
-    ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-    gap = np.diff(ts_us, prepend=ts_us[0] if len(ts_us) else 0) / 1e6
-    if len(gap):
-        gap[0] = 0.0
-    return np.column_stack(
-        [
-            text_len,
-            n_words,
-            (role == "user").astype(np.float64),
-            (role == "assistant").astype(np.float64),
-            (role == "system").astype(np.float64),
-            tool_notnull,
-            gap,
-            np.log1p(text_len),
-        ]
-    )
-
-
-def expanding_standardize(x: np.ndarray) -> np.ndarray:
-    """Expanding (leakage-safe) per-column standardization via cumsums.
-
-    Row t is normalized with mean/std over rows 0..t (ddof=1); columns
-    with zero variance (or t=0) map to 0. Pure cumulative numpy — O(n·d).
-    """
-    n = x.shape[0]
-    if n == 0:
-        return x.copy()
-    # shift by the first row before the cumulative moments: the expanding
-    # std is shift-invariant and this kills most cancellation error when a
-    # column sits at a large offset with small variance
-    x0 = x[0:1, :]
-    x = x - x0
-    counts = np.arange(1, n + 1, dtype=np.float64)[:, None]
-    csum = np.cumsum(x, axis=0)
-    csum2 = np.cumsum(x * x, axis=0)
-    mean = csum / counts
-    with np.errstate(invalid="ignore", divide="ignore"):
-        var = (csum2 - counts * mean * mean) / np.maximum(counts - 1.0, 1.0)
-        var = np.maximum(var, 0.0)
-        std = np.sqrt(var)
-        z = (x - mean) / std
-    z[~np.isfinite(z)] = 0.0
-    z[0, :] = 0.0
-    return z
-
-
-def _featurize_group(pdf: pd.DataFrame, proj: np.ndarray) -> pd.DataFrame:
-    pdf = pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
-    stats = raw_turn_stats(pdf)
-    z = expanding_standardize(stats)
-    vecs = z @ proj.T
-    return pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"].to_numpy(),
-            "turn_idx": pdf["turn_idx"].to_numpy(),
-            "ts": pdf["ts"].to_numpy(),
-            "feature_vec": list(vecs),
-        }
     )
 
 
@@ -176,20 +95,27 @@ def _featurize_segmented(
         x0_seg[0] = carry.x0
     xs = x - x0_seg[seg_id]
 
-    c1 = np.cumsum(xs, axis=0)
-    c2 = np.cumsum(xs * xs, axis=0)
-    base1 = np.zeros_like(x0_seg)
-    base2 = np.zeros_like(x0_seg)
-    base1[1:] = c1[starts[1:] - 1]
-    base2[1:] = c2[starts[1:] - 1]
-    cums = c1 - base1[seg_id]
-    cumq = c2 - base2[seg_id]
+    # Running sums of each conversation are accumulated in row order from
+    # its own first row (a continuing conversation resumes from the carry
+    # exactly as if unsplit), never as differences of a batch-wide cumsum:
+    # those carry the rounding of whichever conversations precede it, so
+    # its features would change with the partitioning.
+    d = x.shape[1]
+    xx = np.hstack([xs, xs * xs])
+    if continuing:
+        xx[0, :d] += carry.s
+        xx[0, d:] += carry.q
+    # one sequential cumsum per distinct conversation length, over all the
+    # conversations of that length stacked: (convs, length, 2d)
+    lengths = np.diff(starts, append=n)
+    cum = np.empty_like(xx)
+    for length in np.unique(lengths).tolist():
+        rows = starts[lengths == length][:, None] + np.arange(length)
+        cum[rows] = np.cumsum(xx[rows], axis=1)
+    cums, cumq = cum[:, :d], cum[:, d:]
     counts = np.arange(n, dtype=np.float64) - starts[seg_id] + 1.0
     if continuing:
-        first_len = starts[1] if len(starts) > 1 else n
-        cums[:first_len] += carry.s
-        cumq[:first_len] += carry.q
-        counts[:first_len] += carry.count
+        counts[: starts[1] if len(starts) > 1 else n] += carry.count
 
     cnt = counts[:, None]
     mean = cums / cnt
@@ -216,10 +142,10 @@ def featurize_fast(
     conv hash, sort within partitions, stream Arrow batches through the
     segmented kernel.
 
-    Identical semantics to :func:`featurize` with three scale wins:
+    Same features as ``oracle.oracle_features``, with three scale wins:
 
     * parallelism = #partitions instead of #groups — no per-conversation
-      pandas overhead (the grouped path pays ~1 ms per group, fatal with
+      pandas overhead (a grouped map pays ~1 ms per group, fatal with
       10^7 short conversations); conversations longer than one Arrow
       batch stream through carry state instead of materializing.
     * the raw per-turn statistics (text length, word count, role one-hot,
@@ -335,113 +261,6 @@ def featurize_fast(
     )
 
 
-def featurize_sql(df: DataFrame, model: FeatureModel | None = None) -> DataFrame:
-    """Pure-JVM featurizer: the whole kernel as Window expressions.
-
-    The expanding standardization is cumulative sums/counts (Window
-    frames ending at currentRow) and the dense projection is 64 literal
-    multiply-adds, so the entire pipeline — scan → window moments →
-    projection — stays inside whole-stage codegen: no Arrow boundary, no
-    Python workers, one shuffle. Fastest and most scalable path; the
-    pandas-UDF paths (:func:`featurize`, :func:`featurize_fast`) remain
-    for kernels that genuinely need numpy (the reference's EM/solve
-    stages would).
-
-    Numerically identical formulation to the numpy kernel: shift by the
-    conversation's first row, cumulative moments, ddof=1, zero where
-    count==1 or variance<=0.
-    """
-    from pyspark.sql.window import Window
-
-    model = model or FeatureModel()
-    proj = model.proj
-
-    text = F.coalesce(F.col("text"), F.lit(""))
-    trimmed = F.trim(text)
-    text_len = F.length(text).cast("double")
-    stats: list = [
-        text_len,
-        F.when(F.length(trimmed) == 0, F.lit(0))
-        .otherwise(F.regexp_count(trimmed, F.lit(r"\s+")) + 1)
-        .cast("double"),
-        (F.col("role") == "user").cast("double"),
-        (F.col("role") == "assistant").cast("double"),
-        (F.col("role") == "system").cast("double"),
-        F.col("tool").isNotNull().cast("double"),
-        None,  # gap, filled below (needs the window)
-        F.log1p(text_len),
-    ]
-
-    w = Window.partitionBy("conv_id").orderBy(F.col("ts").asc(), F.col("turn_idx").asc())
-    wc = w.rowsBetween(Window.unboundedPreceding, 0)
-    from featureengineer_spark.functions.scalars import epoch_micros
-
-    gap = (epoch_micros(F.col("ts")) - epoch_micros(F.lag("ts").over(w))) / 1e6
-    stats[6] = F.coalesce(gap, F.lit(0.0))
-
-    d = len(stats)
-    pre = df.select(
-        "conv_id", "turn_idx", "ts", *[stats[k].alias(f"__s{k}") for k in range(d)]
-    )
-    # shift by first row of the conversation (numerical stability — same
-    # trick as expanding_standardize), then cumulative moments
-    shifted = pre.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.row_number().over(w).cast("double").alias("__n"),
-        *[
-            (F.col(f"__s{k}") - F.first(f"__s{k}").over(wc)).alias(f"__x{k}")
-            for k in range(d)
-        ],
-    )
-    cum = shifted.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        "__n",
-        *[F.col(f"__x{k}") for k in range(d)],
-        *[F.sum(f"__x{k}").over(wc).alias(f"__c{k}") for k in range(d)],
-        *[F.sum(F.col(f"__x{k}") * F.col(f"__x{k}")).over(wc).alias(f"__q{k}") for k in range(d)],
-    )
-    n = F.col("__n")
-    zs = []
-    for k in range(d):
-        mean = F.col(f"__c{k}") / n
-        var = (F.col(f"__q{k}") - n * mean * mean) / F.greatest(n - 1, F.lit(1.0))
-        std = F.sqrt(F.greatest(var, F.lit(0.0)))
-        zs.append(
-            F.when((n > 1) & (std > 0), (F.col(f"__x{k}") - mean) / std).otherwise(0.0)
-        )
-    feats = [
-        sum((float(proj[j, k]) * zs[k] for k in range(d)), F.lit(0.0)).alias(f"f{j}")
-        for j in range(proj.shape[0])
-    ]
-    return cum.select("conv_id", "turn_idx", "ts", *feats).select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.array(*[F.col(f"f{j}") for j in range(proj.shape[0])]).alias("feature_vec"),
-    )
-
-
-def featurize(df: DataFrame, model: FeatureModel | None = None) -> DataFrame:
-    """conv → per-turn ``feature_vec`` (grouped map + broadcast model).
-
-    One shuffle on ``conv_id``; each group is one Arrow batch stream.
-    For mega-conversations route through chunked salting first
-    (``operators.skew``) — expanding stats are scan-composable.
-    """
-    model = model or FeatureModel()
-    sc = df.sparkSession.sparkContext
-    b_proj = sc.broadcast(model.proj)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _featurize_group(pdf, b_proj.value)
-
-    return df.groupBy("conv_id").applyInPandas(fn, schema=FEATURIZE_SCHEMA)
-
-
 def learn_feature_model(df: DataFrame) -> FeatureModel:
     """Learn the projection FROM DATA instead of the fixed seeded matrix:
     one distributed pass fits a PCA whitener (eigh of the covariance,
@@ -452,9 +271,9 @@ def learn_feature_model(df: DataFrame) -> FeatureModel:
     projection from accumulated statistics rather than fixing it
     (``IVector.py:131-244``); for the full supervector-level learned
     projection see ``operators.tv.train_total_variability``. The learned
-    model plugs into :func:`featurize` / :func:`featurize_fast` /
-    :func:`featurize_sql` unchanged, and by construction the projected
-    feature covariance is the identity (decorrelated features).
+    model plugs into :func:`featurize_fast` unchanged, and by construction
+    the projected feature covariance is the identity (decorrelated
+    features).
     """
     import numpy as np
 

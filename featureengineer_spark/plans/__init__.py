@@ -1,6 +1,8 @@
 from featureengineer_spark.plans.pipeline import (  # noqa: F401
     FeaturePipeline,
     StageManifest,
+    StageStore,
+    fingerprint,
     read_manifest,
 )
 from featureengineer_spark.plans.ivector import (  # noqa: F401

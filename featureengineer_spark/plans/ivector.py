@@ -17,31 +17,25 @@ committed. Stages here:
 5. **latent** — per-conversation latent factors
    (``tv.extract_latent_factors``), parquet + manifest.
 
-Resume discipline = the repo-wide one (``plans.pipeline``): a stage whose
-manifest fingerprint matches its parents and whose data is committed is
-served from storage; model stages store the model as npz with the same
-manifest JSON. Changing any upstream config changes every downstream
-fingerprint, so stale mixtures can never silently feed the TV stage.
+Resume discipline = the repo-wide one (``plans.pipeline.StageStore``): a
+stage whose manifest fingerprint matches its parents and parameters and
+whose data is committed is served from storage; model stages store the
+model as npz with the same manifest JSON. Changing any upstream config
+changes every downstream fingerprint, so stale mixtures can never
+silently feed the TV stage.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-import time
 from dataclasses import dataclass, field
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from featureengineer_spark.plans.pipeline import (
-    StageManifest,
-    _partition_counts,
-    read_manifest,
-)
+from featureengineer_spark.plans.pipeline import StageStore
 
 __all__ = ["IVectorConfig", "IVectorPipeline"]
+
+_STAGES = ["features", "ubm", "stats", "tv", "latent"]
 
 
 @dataclass
@@ -62,100 +56,9 @@ class IVectorPipeline:
     source_fingerprint: str = "transcripts-v1"
     executed: list[str] = field(default_factory=list)
 
-    # -- checkpoint plumbing -------------------------------------------------
-
-    def _fp(self, stage: str, parent_fp: str, params: dict) -> str:
-        blob = f"{stage}|{parent_fp}|{json.dumps(params, sort_keys=True)}"
-        return hashlib.sha256(blob.encode()).hexdigest()[:16]
-
-    def _df_complete(self, stage: str, fp: str) -> bool:
-        m = read_manifest(self.root, stage)
-        ok = os.path.exists(os.path.join(self.root, stage, "data", "_SUCCESS"))
-        return bool(m and m.fingerprint == fp and ok)
-
-    def _write_df(self, stage: str, df: DataFrame, fp: str, parents: list[str]) -> DataFrame:
-        data_dir = os.path.join(self.root, stage, "data")
-        df.write.mode("overwrite").parquet(data_dir)
-        part_rows = _partition_counts(self.spark, data_dir)
-        manifest = StageManifest(
-            stage=stage,
-            fingerprint=fp,
-            parents=parents,
-            total_rows=sum(part_rows.values()),
-            partition_rows=part_rows,
-            written_at=time.time(),
-            schema=self.spark.read.parquet(data_dir).schema.simpleString(),
-        )
-        self._commit_manifest(stage, manifest)
-        self.executed.append(stage)
-        return self.spark.read.parquet(data_dir)
-
-    def _model_complete(self, stage: str, fp: str) -> bool:
-        m = read_manifest(self.root, stage)
-        ok = os.path.exists(os.path.join(self.root, stage, "model.npz"))
-        return bool(m and m.fingerprint == fp and ok)
-
-    def _write_model(self, stage: str, arrays: dict, fp: str, parents: list[str]) -> None:
-        os.makedirs(os.path.join(self.root, stage), exist_ok=True)
-        tmp = os.path.join(self.root, stage, "model.npz.tmp.npz")
-        np.savez(tmp, **arrays)
-        os.replace(tmp, os.path.join(self.root, stage, "model.npz"))
-        manifest = StageManifest(
-            stage=stage,
-            fingerprint=fp,
-            parents=parents,
-            total_rows=0,
-            partition_rows={k: int(np.asarray(v).size) for k, v in arrays.items()},
-            written_at=time.time(),
-            schema="model.npz:" + ",".join(sorted(arrays)),
-        )
-        self._commit_manifest(stage, manifest)
-        self.executed.append(stage)
-
-    def _commit_manifest(self, stage: str, manifest: StageManifest) -> None:
-        tmp = os.path.join(self.root, stage, "manifest.json.tmp")
-        os.makedirs(os.path.join(self.root, stage), exist_ok=True)
-        with open(tmp, "w") as f:
-            f.write(manifest.to_json())
-        os.replace(tmp, os.path.join(self.root, stage, "manifest.json"))
-
-    def _load_model(self, stage: str) -> dict:
-        with np.load(os.path.join(self.root, stage, "model.npz")) as z:
-            return {k: z[k] for k in z.files}
-
     def validate(self) -> dict[str, dict]:
-        """Audit every committed stage against its manifest — parquet
-        stages by per-file row counts, model stages by npz presence and
-        array sizes (the reference's expected-vs-produced completeness
-        diff, ``FeaGet.py:116-131``)."""
-        report: dict[str, dict] = {}
-        for stage in ("features", "ubm", "stats", "tv", "latent"):
-            m = read_manifest(self.root, stage)
-            if m is None:
-                report[stage] = {"status": "missing"}
-                continue
-            if m.schema.startswith("model.npz:"):
-                path = os.path.join(self.root, stage, "model.npz")
-                if not os.path.exists(path):
-                    report[stage] = {"status": "corrupt", "reason": "npz missing"}
-                    continue
-                with np.load(path) as z:
-                    sizes = {k: int(z[k].size) for k in z.files}
-                ok = sizes == m.partition_rows
-                report[stage] = {"status": "ok" if ok else "corrupt", "arrays": sizes}
-            else:
-                actual = _partition_counts(
-                    self.spark, os.path.join(self.root, stage, "data")
-                )
-                ok = actual == m.partition_rows
-                report[stage] = {
-                    "status": "ok" if ok else "corrupt",
-                    "expected_rows": m.total_rows,
-                    "actual_rows": sum(actual.values()),
-                }
-        return report
-
-    # -- the 5 stages ----------------------------------------------------------
+        """Audit every committed stage against its manifest."""
+        return StageStore(self.spark, self.root).validate(_STAGES)
 
     def run(self, transcripts: DataFrame) -> DataFrame:
         """Execute (or resume) all five stages; returns the latent-factor
@@ -173,61 +76,44 @@ class IVectorPipeline:
         )
 
         cfg = self.config
-        os.makedirs(self.root, exist_ok=True)
-        self.executed = []
+        store = StageStore(self.spark, self.root)
+        self.executed = store.executed
 
-        fp_feat = self._fp("features", self.source_fingerprint, {})
-        if self._df_complete("features", fp_feat):
-            feats = self.spark.read.parquet(os.path.join(self.root, "features", "data"))
-        else:
-            feats = self._write_df(
-                "features", featurize_fast(transcripts), fp_feat, [self.source_fingerprint]
-            )
-
-        fp_ubm = self._fp(
-            "ubm",
-            fp_feat,
-            {"k": cfg.n_components, "iters": cfg.ubm_iters_per_stage, "min_var": cfg.min_var},
+        feats, fp_feat = store.df_stage(
+            "features", [self.source_fingerprint], {},
+            lambda: featurize_fast(transcripts),
         )
-        if self._model_complete("ubm", fp_ubm):
-            z = self._load_model("ubm")
-            ubm = GMM(z["weights"], z["means"], z["variances"])
-        else:
-            ubm = train_gmm_split(
+
+        def build_ubm() -> dict:
+            g = train_gmm_split(
                 feats,
                 n_components=cfg.n_components,
                 n_iter_per_stage=cfg.ubm_iters_per_stage,
                 min_var=cfg.min_var,
             )
-            self._write_model(
-                "ubm",
-                {"weights": ubm.weights, "means": ubm.means, "variances": ubm.variances},
-                fp_ubm,
-                [fp_feat],
-            )
+            return {"weights": g.weights, "means": g.means, "variances": g.variances}
 
-        fp_stats = self._fp("stats", fp_ubm, {})
-        if self._df_complete("stats", fp_stats):
-            stats = self.spark.read.parquet(os.path.join(self.root, "stats", "data"))
-        else:
-            stats = self._write_df(
-                "stats", sufficient_stats(feats, ubm), fp_stats, [fp_feat, fp_ubm]
-            )
-
-        fp_tv = self._fp(
-            "tv", fp_stats, {"rank": cfg.tv_rank, "iters": cfg.tv_iters, "seed": cfg.tv_seed}
+        z, fp_ubm = store.model_stage(
+            "ubm", [fp_feat],
+            {"k": cfg.n_components, "iters": cfg.ubm_iters_per_stage, "min_var": cfg.min_var},
+            build_ubm,
         )
-        if self._model_complete("tv", fp_tv):
-            tv = TVModel(F_mat=self._load_model("tv")["F_mat"], ubm=ubm)
-        else:
-            tv = train_total_variability(
+        ubm = GMM(z["weights"], z["means"], z["variances"])
+
+        stats, fp_stats = store.df_stage(
+            "stats", [fp_feat, fp_ubm], {}, lambda: sufficient_stats(feats, ubm)
+        )
+
+        z, fp_tv = store.model_stage(
+            "tv", [fp_stats],
+            {"rank": cfg.tv_rank, "iters": cfg.tv_iters, "seed": cfg.tv_seed},
+            lambda: {"F_mat": train_total_variability(
                 stats, ubm, rank=cfg.tv_rank, n_iter=cfg.tv_iters, seed=cfg.tv_seed
-            )
-            self._write_model("tv", {"F_mat": tv.F_mat}, fp_tv, [fp_stats])
-
-        fp_lat = self._fp("latent", fp_tv, {})
-        if self._df_complete("latent", fp_lat):
-            return self.spark.read.parquet(os.path.join(self.root, "latent", "data"))
-        return self._write_df(
-            "latent", extract_latent_factors(stats, tv), fp_lat, [fp_stats, fp_tv]
+            ).F_mat},
         )
+        tv = TVModel(F_mat=z["F_mat"], ubm=ubm)
+
+        latent, _ = store.df_stage(
+            "latent", [fp_stats, fp_tv], {}, lambda: extract_latent_factors(stats, tv)
+        )
+        return latent

@@ -6,14 +6,20 @@ discipline: every pipeline stage writes its output to shared storage
 ``IVector.py:1719-1729``) and failed per-file work is recorded and
 re-run from a pickle ledger (``FeaGet.py:127-144``). Here:
 
-* each stage materializes to parquet under ``<root>/<stage>/data``;
+* each stage materializes to parquet under ``<root>/<stage>/data`` (or,
+  for a model stage, to ``<root>/<stage>/model.npz``);
 * a JSON manifest (``<root>/<stage>/manifest.json``) records the stage
-  id, input lineage (parent stage fingerprints + logical-plan hash),
-  per-partition row counts, and total rows — the per-partition lineage +
-  metrics the north rule requires;
-* on re-run, a stage whose manifest matches its inputs' fingerprints is
-  **skipped** and served from parquet (exact resume); any stage whose
-  lineage changed recomputes, and everything downstream follows.
+  id, its :func:`fingerprint` (stage name + parent fingerprints +
+  parameters), the parent fingerprints, per-partition row counts, and
+  total rows — the per-partition lineage + metrics the north rule
+  requires;
+* on re-run, a stage whose manifest matches its fingerprint is
+  **skipped** and served from storage (exact resume); any stage whose
+  lineage or parameters changed recomputes, and everything downstream
+  follows.
+
+:class:`StageStore` is that discipline, once: :class:`FeaturePipeline`,
+``plans.ivector.IVectorPipeline`` and ``plans.webcurate`` all run on it.
 
 The builder mirrors the reference's fluent scoring chain
 (``IVector.py:1763-1794``: ``iv.two_covariance_Score().selectDataForPlda()
@@ -23,14 +29,19 @@ materialization points, Catalyst optimizing within each stage.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import numpy as np
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_MODEL_SCHEMA = "model.npz:"  # manifest ``schema`` prefix of npz model stages
 
 
 @dataclass
@@ -67,6 +78,161 @@ def _partition_counts(spark: SparkSession, data_dir: str) -> dict[str, int]:
         .collect()
     )
     return {r["file"]: r["count"] for r in rows}
+
+
+def _canonical(value):
+    """``value`` with every set sorted and every tuple a list, so equal
+    parameters digest equally under any ``PYTHONHASHSEED``."""
+    if isinstance(value, dict):
+        return {str(k): _canonical(v) for k, v in value.items()}
+    if isinstance(value, (set, frozenset)):
+        return sorted(
+            (_canonical(v) for v in value),
+            key=lambda v: json.dumps(v, sort_keys=True, default=str),
+        )
+    if isinstance(value, (list, tuple)):
+        return [_canonical(v) for v in value]
+    return value
+
+
+def fingerprint(name: str, parents: list[str], params: dict | None = None) -> str:
+    """Stage identity = name + parent fingerprints + parameters. Any
+    change to a parameter or an upstream stage changes it, so resume
+    never serves output computed under other settings. Transform code
+    changes should bump the stage name (the reference versions its
+    stage dirs the same way: ``ubm_2048.h5`` vs ``ubm_1024.h5``)."""
+    blob = json.dumps(
+        [name, list(parents), _canonical(params or {})], sort_keys=True, default=str
+    )
+    return hashlib.sha256(blob.encode()).hexdigest()[:16]
+
+
+@dataclass
+class StageStore:
+    """Checkpointed stages under ``root``: ``<root>/<stage>/data`` (parquet)
+    or ``<root>/<stage>/model.npz``, each attested by
+    ``<root>/<stage>/manifest.json``.
+
+    A stage is served from storage when its manifest carries the expected
+    fingerprint and its data is committed; otherwise it is built, written,
+    counted and its manifest committed last. The old manifest is removed
+    before the data is overwritten, so a run that dies between the two
+    writes leaves the stage unattested rather than attested by a manifest
+    that describes other data."""
+
+    spark: SparkSession
+    root: str
+    executed: list[str] = field(default_factory=list)  # stages built, not resumed
+
+    def _path(self, stage: str, *parts: str) -> str:
+        return os.path.join(self.root, stage, *parts)
+
+    def _committed(self, stage: str, fp: str, marker: str) -> bool:
+        m = read_manifest(self.root, stage)
+        return bool(m and m.fingerprint == fp and os.path.exists(marker))
+
+    def _drop_manifest(self, stage: str) -> None:
+        try:
+            os.remove(self._path(stage, "manifest.json"))
+        except FileNotFoundError:
+            pass
+
+    def _commit(
+        self, stage: str, fp: str, parents: list[str], total_rows: int,
+        partition_rows: dict[str, int], schema: str,
+    ) -> None:
+        """Write the manifest last, atomically; the stage counts as executed."""
+        manifest = StageManifest(
+            stage=stage,
+            fingerprint=fp,
+            parents=list(parents),
+            total_rows=total_rows,
+            partition_rows=partition_rows,
+            written_at=time.time(),
+            schema=schema,
+        )
+        tmp = self._path(stage, "manifest.json.tmp")
+        with open(tmp, "w") as f:
+            f.write(manifest.to_json())
+        os.replace(tmp, self._path(stage, "manifest.json"))
+        self.executed.append(stage)
+
+    def df_stage(
+        self,
+        name: str,
+        parents: list[str],
+        params: dict,
+        build: Callable[[], DataFrame],
+    ) -> tuple[DataFrame, str]:
+        """Resume or build a parquet stage; returns (stage data, fingerprint)."""
+        fp = fingerprint(name, parents, params)
+        data_dir = self._path(name, "data")
+        if not self._committed(name, fp, os.path.join(data_dir, "_SUCCESS")):
+            df = build()
+            self._drop_manifest(name)
+            df.write.mode("overwrite").parquet(data_dir)
+            part_rows = _partition_counts(self.spark, data_dir)
+            schema = self.spark.read.parquet(data_dir).schema.simpleString()
+            self._commit(
+                name, fp, parents, sum(part_rows.values()), part_rows, schema
+            )
+        return self.spark.read.parquet(data_dir), fp
+
+    def model_stage(
+        self,
+        name: str,
+        parents: list[str],
+        params: dict,
+        build: Callable[[], dict[str, np.ndarray]],
+    ) -> tuple[dict[str, np.ndarray], str]:
+        """Resume or build an npz model stage; returns (arrays, fingerprint)."""
+        fp = fingerprint(name, parents, params)
+        path = self._path(name, "model.npz")
+        if not self._committed(name, fp, path):
+            arrays = build()
+            self._drop_manifest(name)
+            os.makedirs(self._path(name), exist_ok=True)
+            tmp = path + ".tmp.npz"  # np.savez appends .npz unless present
+            np.savez(tmp, **arrays)
+            os.replace(tmp, path)
+            sizes = {k: int(np.asarray(v).size) for k, v in arrays.items()}
+            self._commit(
+                name, fp, parents, 0, sizes, _MODEL_SCHEMA + ",".join(sorted(arrays))
+            )
+        with np.load(path) as z:
+            return {k: z[k] for k in z.files}, fp
+
+    def validate(self, names: list[str]) -> dict[str, dict]:
+        """Audit committed stages against their manifests — parquet stages
+        by per-file row counts, model stages by npz array sizes (the
+        reference's expected-vs-produced completeness diff,
+        ``FeaGet.py:116-131``)."""
+        report: dict[str, dict] = {}
+        for name in names:
+            m = read_manifest(self.root, name)
+            if m is None:
+                report[name] = {"status": "missing"}
+            elif m.schema.startswith(_MODEL_SCHEMA):
+                path = self._path(name, "model.npz")
+                if not os.path.exists(path):
+                    report[name] = {"status": "corrupt", "reason": "npz missing"}
+                    continue
+                with np.load(path) as z:
+                    sizes = {k: int(z[k].size) for k in z.files}
+                ok = sizes == m.partition_rows
+                report[name] = {"status": "ok" if ok else "corrupt", "arrays": sizes}
+            else:
+                try:
+                    actual = _partition_counts(self.spark, self._path(name, "data"))
+                except AnalysisException:  # data dir or every part file gone
+                    actual = {}
+                ok = actual == m.partition_rows
+                report[name] = {
+                    "status": "ok" if ok else "corrupt",
+                    "expected_rows": m.total_rows,
+                    "actual_rows": sum(actual.values()),
+                }
+        return report
 
 
 @dataclass
@@ -107,81 +273,24 @@ class FeaturePipeline:
         self._stages.append(_Stage(name, fn))
         return self
 
-    # -- internals ---------------------------------------------------------
-
-    def _fingerprint(self, stage: _Stage, parent_fp: str) -> str:
-        """Stage identity = name + parent lineage. Transform code changes
-        should bump the stage name (the reference versions its stage dirs
-        the same way: ``ubm_2048.h5`` vs ``ubm_1024.h5``)."""
-        import hashlib
-
-        h = hashlib.sha256(f"{stage.name}|{parent_fp}".encode())
-        return h.hexdigest()[:16]
-
-    def _is_complete(self, stage: _Stage, fp: str) -> bool:
-        m = read_manifest(self.root, stage.name)
-        data_ok = os.path.exists(os.path.join(self.root, stage.name, "data", "_SUCCESS"))
-        return bool(m and m.fingerprint == fp and data_ok)
-
-    def _materialize(self, stage: _Stage, df: DataFrame, fp: str, parents: list[str]) -> None:
-        data_dir = os.path.join(self.root, stage.name, "data")
-        df.write.mode("overwrite").parquet(data_dir)
-        part_rows = _partition_counts(self.spark, data_dir)
-        manifest = StageManifest(
-            stage=stage.name,
-            fingerprint=fp,
-            parents=parents,
-            total_rows=sum(part_rows.values()),
-            partition_rows=part_rows,
-            written_at=time.time(),
-            schema=self.spark.read.parquet(data_dir).schema.simpleString(),
-        )
-        tmp = os.path.join(self.root, stage.name, "manifest.json.tmp")
-        with open(tmp, "w") as f:
-            f.write(manifest.to_json())
-        os.replace(tmp, os.path.join(self.root, stage.name, "manifest.json"))
-
-    # -- execution ----------------------------------------------------------
-
     def run(self) -> DataFrame:
         """Execute stage by stage; completed stages (matching fingerprint
         + committed data) are read back instead of recomputed."""
         if self._source is None:
             raise ValueError("pipeline has no source()")
-        os.makedirs(self.root, exist_ok=True)
-        self.executed = []
+        store = StageStore(self.spark, self.root)
+        self.executed = store.executed
         df = self._source(self.spark)
-        parent_fp = self._source_fingerprint or "source-v1"
+        fp = self._source_fingerprint or "source-v1"
         for stage in self._stages:
-            fp = self._fingerprint(stage, parent_fp)
-            data_dir = os.path.join(self.root, stage.name, "data")
-            if self._is_complete(stage, fp):
-                df = self.spark.read.parquet(data_dir)
-            else:
-                df = stage.fn(df)
-                self._materialize(stage, df, fp, [parent_fp])
-                self.executed.append(stage.name)
-                df = self.spark.read.parquet(data_dir)
-            parent_fp = fp
+            df, fp = store.df_stage(
+                stage.name, [fp], {}, lambda fn=stage.fn, df=df: fn(df)
+            )
         return df
 
     def validate(self) -> dict[str, dict]:
         """Audit committed stages against their manifests (row counts per
-        file) — the completeness check the reference does by diffing
-        expected vs produced files (``FeaGet.py:116-131``)."""
-        report: dict[str, dict] = {}
-        for stage in self._stages:
-            m = read_manifest(self.root, stage.name)
-            if m is None:
-                report[stage.name] = {"status": "missing"}
-                continue
-            actual = _partition_counts(
-                self.spark, os.path.join(self.root, stage.name, "data")
-            )
-            ok = actual == m.partition_rows
-            report[stage.name] = {
-                "status": "ok" if ok else "corrupt",
-                "expected_rows": m.total_rows,
-                "actual_rows": sum(actual.values()),
-            }
-        return report
+        file)."""
+        return StageStore(self.spark, self.root).validate(
+            [s.name for s in self._stages]
+        )

@@ -32,12 +32,12 @@ fuses each stage's operators into as few shuffles as the pass allows.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from featureengineer_spark.plans.pipeline import FeaturePipeline
+from featureengineer_spark.plans.pipeline import FeaturePipeline, fingerprint
 
 
 @dataclass
@@ -62,21 +62,6 @@ class WebCurationConfig:
     seed: int = 0
 
 
-def _config_fingerprint(cfg: WebCurationConfig) -> str:
-    """Stable digest of the FULL config: resume must miss when any value
-    changes, including ones that do not alter the stage list (blocked
-    domain contents, allowed langs, mix totals, min_words, shard count) —
-    previously only ``seed`` + stage names were folded in, so rerunning
-    at the same root with a different such value silently returned the
-    old manifests' parquet."""
-    import dataclasses
-    import hashlib
-    import json
-
-    blob = json.dumps(dataclasses.asdict(cfg), sort_keys=True, default=str)
-    return hashlib.sha256(blob.encode()).hexdigest()[:16]
-
-
 def web_curation_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -97,11 +82,15 @@ def web_curation_pipeline(
     local frames), so without it, resume assumes the root is dedicated
     to one input dataset, as before."""
     cfg = config or WebCurationConfig()
-    data_part = f"-{data_fingerprint}" if data_fingerprint else ""
+    # the FULL config: resume must miss when any value changes, including
+    # ones that do not alter the stage list (blocked domain contents,
+    # allowed langs, mix totals, min_words, shard count)
     pipe = FeaturePipeline(spark, root).source(
         lambda _spark: docs,
-        fingerprint=(
-            f"webcurate-src-{_config_fingerprint(cfg)}{data_part}"
+        fingerprint=fingerprint(
+            "webcurate-src",
+            [data_fingerprint] if data_fingerprint else [],
+            asdict(cfg),
         ),
     )
 

@@ -1,18 +1,18 @@
-"""Grouped-map featurizer vs pandas oracle — the allclose gate at each
-(conv_id, ts) key (BASELINE.json:metric)."""
+"""Segmented mapInArrow featurizer vs pandas oracle — the allclose gate
+at each (conv_id, ts) key (BASELINE.json:metric)."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from featureengineer_spark.kernels import FEATURE_DIM, featurize
+from featureengineer_spark.kernels import FEATURE_DIM, featurize_fast
 from featureengineer_spark.oracle import oracle_features
 
 KEY = ["conv_id", "ts", "turn_idx"]
 
 
 def test_feature_vec_allclose(spark, transcripts, transcripts_pdf):
-    got = featurize(transcripts).toPandas().sort_values(KEY, kind="mergesort")
+    got = featurize_fast(transcripts).toPandas().sort_values(KEY, kind="mergesort")
     exp = oracle_features(transcripts_pdf).sort_values(KEY, kind="mergesort")
     assert len(got) == len(exp)
     gv = np.vstack(got["feature_vec"].to_numpy())
@@ -27,8 +27,10 @@ def test_feature_vec_allclose(spark, transcripts, transcripts_pdf):
 
 
 def test_featurize_deterministic_across_partitionings(spark, transcripts):
-    a = featurize(transcripts.repartition(3)).toPandas().sort_values(KEY, kind="mergesort")
-    b = featurize(transcripts.repartition(17)).toPandas().sort_values(KEY, kind="mergesort")
+    a = featurize_fast(transcripts.repartition(3), partitions=3)
+    a = a.toPandas().sort_values(KEY, kind="mergesort")
+    b = featurize_fast(transcripts.repartition(17), partitions=17)
+    b = b.toPandas().sort_values(KEY, kind="mergesort")
     np.testing.assert_allclose(
         np.vstack(a["feature_vec"].to_numpy()),
         np.vstack(b["feature_vec"].to_numpy()),
@@ -37,8 +39,6 @@ def test_featurize_deterministic_across_partitionings(spark, transcripts):
 
 
 def test_featurize_fast_allclose(spark, transcripts, transcripts_pdf):
-    from featureengineer_spark.kernels import featurize_fast
-
     got = featurize_fast(transcripts, partitions=7).toPandas().sort_values(KEY, kind="mergesort")
     exp = oracle_features(transcripts_pdf).sort_values(KEY, kind="mergesort")
     assert len(got) == len(exp)
@@ -50,9 +50,8 @@ def test_featurize_fast_allclose(spark, transcripts, transcripts_pdf):
 def test_featurize_fast_small_batches_cross_batch_carry(spark, transcripts, transcripts_pdf):
     """Force tiny Arrow batches so the mega conversation spans many
     batches — exercises the carry-state path."""
-    from featureengineer_spark.kernels import featurize_fast
-
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    whole = featurize_fast(transcripts, partitions=3).toPandas().sort_values(KEY, kind="mergesort")
     prev = spark.conf.get(key)
     spark.conf.set(key, "64")
     try:
@@ -65,25 +64,16 @@ def test_featurize_fast_small_batches_cross_batch_carry(spark, transcripts, tran
         np.vstack(exp["feature_vec"].to_numpy()),
         rtol=1e-5, atol=1e-8,
     )
-
-
-def test_featurize_sql_allclose(spark, transcripts, transcripts_pdf):
-    from featureengineer_spark.kernels import featurize_sql
-
-    got = featurize_sql(transcripts).toPandas().sort_values(KEY, kind="mergesort")
-    exp = oracle_features(transcripts_pdf).sort_values(KEY, kind="mergesort")
-    assert len(got) == len(exp)
+    # the carry resumes each running sum exactly: batch size is invisible
     np.testing.assert_allclose(
         np.vstack(got["feature_vec"].to_numpy()),
-        np.vstack(exp["feature_vec"].to_numpy()),
-        rtol=1e-5, atol=1e-8,
+        np.vstack(whole["feature_vec"].to_numpy()),
+        rtol=1e-12,
     )
 
 
 def test_featurize_fast_clustered_allclose(spark, transcripts, transcripts_pdf, tmp_path):
     """clustered=True over a conv-bucketed store (no exchange) must match."""
-    from featureengineer_spark.kernels import featurize_fast
-
     path = str(tmp_path / "clustered")
     transcripts.repartition(5, "conv_id").write.parquet(path)
     t = spark.read.parquet(path)
@@ -103,7 +93,7 @@ def test_learn_feature_model_whitens(spark, transcripts):
     construction)."""
     import numpy as np
 
-    from featureengineer_spark.kernels import featurize_fast, learn_feature_model
+    from featureengineer_spark.kernels import learn_feature_model
 
     model = learn_feature_model(transcripts)
     out = featurize_fast(transcripts, model=model)

@@ -80,6 +80,76 @@ def test_validate_reports_ok(spark, transcripts, tmp_path):
     report = pipe.validate()
     assert all(v["status"] == "ok" for v in report.values()), report
 
+    # a lost part file no longer matches the manifest's per-file counts
+    parts = sorted((root / "rolling" / "data").glob("part-*.parquet"))
+    parts[0].unlink()
+    report = pipe.validate()
+    assert report["rolling"]["status"] == "corrupt", report
+    assert report["rolling"]["actual_rows"] < report["rolling"]["expected_rows"]
+    assert report["sessionized"]["status"] == report["final"]["status"] == "ok"
+
+
+def test_rerun_after_crash_before_manifest_commit_recomputes(spark, tmp_path, monkeypatch):
+    """A stage committed under config A, then overwritten by a config-B
+    run that dies between its data write and its manifest commit, must
+    not be served as A's output when A is rerun."""
+    import featureengineer_spark.plans.pipeline as pipeline
+
+    root = str(tmp_path / "stale")
+
+    def build(offset, fp):
+        return (
+            FeaturePipeline(spark, root=root)
+            .source(lambda s: s.range(3), fingerprint=fp)
+            .stage("shifted", lambda df: df.select((F.col("id") + offset).alias("y")))
+        )
+
+    build(100, "config-a").run()
+
+    def die(*_args, **_kwargs):
+        raise RuntimeError("killed before manifest commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "_partition_counts", die)
+        with pytest.raises(RuntimeError, match="killed"):
+            build(200, "config-b").run()
+
+    pipe = build(100, "config-a")
+    ys = sorted(r["y"] for r in pipe.run().collect())
+    assert pipe.executed == ["shifted"]
+    assert ys == [100, 101, 102]
+
+
+def test_fingerprint_canonical_for_unordered_containers():
+    """Sets digest in sorted order, so an equal config resumes under any
+    PYTHONHASHSEED."""
+    from featureengineer_spark.plans.pipeline import fingerprint
+    from featureengineer_spark.plans.webcurate import (
+        WebCurationConfig,
+        web_curation_pipeline,
+    )
+
+    # enough members that hash order matching sorted order by chance is
+    # negligible under any seed
+    domains = {f"d{i:02d}.com" for i in range(12)}
+    ordered = tuple(sorted(domains))
+    assert fingerprint("s", ["p"], {"d": domains}) == fingerprint(
+        "s", ["p"], {"d": ordered}
+    )
+    assert fingerprint("s", ["p"], {"d": frozenset(domains)}) == fingerprint(
+        "s", ["p"], {"d": ordered}
+    )
+    assert fingerprint("s", ["p"], {"d": domains}) != fingerprint(
+        "s", ["p"], {"d": ordered[1:]}
+    )
+
+    def source_fp(cfg):
+        return web_curation_pipeline(None, None, "/unused", cfg)._source_fingerprint
+
+    assert source_fp(WebCurationConfig(blocked_domains=domains)) == source_fp(
+        WebCurationConfig(blocked_domains=ordered)
+    )
+
 
 def test_leakage_validator(spark, transcripts, anchors):
     from featureengineer_spark.operators import asof_join
@@ -116,6 +186,8 @@ def test_ivector_pipeline_end_to_end_and_resume(spark, tmp_path):
     """The 5-stage model pipeline (mpiMain graft): end-to-end run, then a
     re-run resumes EVERY stage from checkpoint (identical output, nothing
     recomputed); a config change recomputes only downstream stages."""
+    import os
+
     import numpy as np
 
     from featureengineer_spark.data import synth_transcripts_spark
@@ -145,6 +217,12 @@ def test_ivector_pipeline_end_to_end_and_resume(spark, tmp_path):
     # manifest audit: all five stages committed and consistent
     report = pipe3.validate()
     assert all(v["status"] == "ok" for v in report.values()), report
+
+    # a lost model file is reported, the other stages still audit clean
+    os.remove(os.path.join(root, "tv", "model.npz"))
+    report = pipe3.validate()
+    assert report["tv"]["status"] == "corrupt", report
+    assert all(v["status"] == "ok" for k, v in report.items() if k != "tv"), report
 
 
 def test_ivector_pipeline_survives_sigkill(spark, tmp_path):

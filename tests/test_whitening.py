@@ -1,5 +1,5 @@
 """PCA whitening + length norm vs numpy (jyh/Utils.py:369-404 graft),
-model checkpointing, and observe metrics."""
+and model checkpointing."""
 
 from __future__ import annotations
 
@@ -51,16 +51,6 @@ def test_model_save_load(tmp_path):
     save_model(m, str(tmp_path / "model"))
     m2 = load_model(str(tmp_path / "model"))
     np.testing.assert_array_equal(m.proj, m2.proj)
-
-
-def test_observe_metrics(spark, transcripts):
-    from featureengineer_spark.metrics import with_metrics
-
-    df, obs = with_metrics(transcripts, "t1")
-    df.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    assert got["n_rows"] == transcripts.count()
-    assert got["n_convs_approx"] > 0
 
 
 def test_sphnorm_matches_numpy_iterations(spark, vec_df):
