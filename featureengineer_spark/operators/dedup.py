@@ -44,8 +44,11 @@ def _norm_words(col) -> F.Column:
     no-alphanumerics document, where that form yields ``[""]`` and this
     yields ``[]`` — every caller filters empty words/shingles, so the
     two are interchangeable downstream, and this form skips the
-    join-then-resplit round trip."""
-    return F.filter(F.split(F.lower(col), r"[^a-z0-9]+"), lambda w: w != F.lit(""))
+    join-then-resplit round trip. ``array_remove`` drops exactly the
+    empty words a ``filter(w != '')`` would (``split`` yields no NULL
+    elements) without a Python lambda, which costs ~35 more driver->JVM
+    round trips every time the plan is built."""
+    return F.array_remove(F.split(F.lower(col), r"[^a-z0-9]+"), "")
 
 
 def dedup_exact(
@@ -59,19 +62,6 @@ def dedup_exact(
     return df.join(keep, on=id_col, how="inner").drop("__h")
 
 
-def duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Groups of exact duplicates: (text_hash, n_dups, min_doc_id)."""
-    h = F.md5(normalize_text(F.col(text_col)))
-    return (
-        df.select(F.col(id_col), h.alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(F.count("*").alias("n_dups"), F.min(id_col).alias("min_doc_id"))
-        .filter(F.col("n_dups") > 1)
-    )
-
-
 def _word_shingles(text_col: str, n: int) -> F.Column:
     """Distinct word n-gram shingles as an array column (JVM-side).
 
@@ -82,23 +72,20 @@ def _word_shingles(text_col: str, n: int) -> F.Column:
     the explode form, which does exactly that. Inlining
     ``split(normalize(text))`` here would run the two regexes ~|words|
     times per document (measured ~20× wall on the shingle stage)."""
-    words = F.col(text_col)
-    k = F.greatest(F.size(words) - (n - 1), F.lit(1))
     # Shingle i is built with n positional gets + one concat_ws rather
     # than array_join(slice(...)): slice allocates a fresh ArrayData per
     # element inside the interpreted lambda, measured 2.4 s vs 0.6 s for
-    # the 10.6M-shingle bench corpus. Byte-identical output: F.get
-    # returns NULL past the end (ANSI-safe, unlike element_at) and
-    # concat_ws skips NULLs, exactly like array_join over the short tail
-    # slice; the n==0-words case yields "" in both forms (callers filter
-    # empty shingles).
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(
-                " ", *[F.get(words, i + F.lit(j) - 1) for j in range(n)]
-            ),
-        )
+    # the 10.6M-shingle bench corpus. Byte-identical output: get returns
+    # NULL past the end (ANSI-safe, unlike element_at) and concat_ws
+    # skips NULLs, exactly like array_join over the short tail slice; the
+    # n==0-words case yields "" in both forms (callers filter empty
+    # shingles). One parsed expression, not a Python lambda over Column
+    # objects, which costs ~160 driver->JVM round trips per plan.
+    w = f"`{text_col}`"
+    gets = ", ".join(f"get({w}, i + {j} - 1)" for j in range(n))
+    return F.expr(
+        f"array_distinct(transform(sequence(1, greatest(size({w}) - {n - 1}, 1)),"
+        f" i -> concat_ws(' ', {gets})))"
     )
 
 
@@ -177,27 +164,26 @@ def minhash_signatures(
     ``h_p = (a_p·h + b_p) mod (2³¹−1)`` with seed-derived coefficients —
     integer multiply-adds instead of ``num_perm`` string hashes per
     shingle (the datasketch formulation; ~20× less hashing work at
-    num_perm=64). One explode + one partial-aggregating groupBy with
-    ``num_perm`` min() columns — map-side combinable. ``hash_fn='md5'``
+    num_perm=64). One explode + one partial-aggregating groupBy whose
+    aggregate is a single ``array(min(...), ...)`` expression over the
+    ``num_perm`` permutations — map-side combinable. ``hash_fn='md5'``
     trades base-hash speed for a DuckDB-reproducible signature (same
     minima both engines — used by the oracle-checked gate query)."""
-    p_lit = F.lit(MINHASH_PRIME)
     base = _seeded_hash(seed, F.col("__sh"), hash_fn)
     ex = _exploded_shingles(df, id_col, text_col, shingle).select(
-        id_col, F.pmod(base, p_lit).alias("__h")
+        id_col, F.pmod(base, F.lit(MINHASH_PRIME)).alias("__h")
     )
+    # One parsed SQL expression, not a Column per permutation: every F.*
+    # call is a driver->JVM round trip, and num_perm Columns cost ~5,300
+    # of them (~0.8 s) per plan at num_perm=64 — paid on every streaming
+    # gate micro-batch before any data moves. Literal types are those of
+    # F.lit (int coefficients and modulus, long __h); the minima are
+    # pinned in tests/test_dedup.py.
     a, b = minhash_perm_coeffs(num_perm, seed)
-    mins = ex.groupBy(id_col).agg(
-        *[
-            F.min(F.pmod(F.lit(a[p]) * F.col("__h") + F.lit(b[p]), p_lit)).alias(
-                f"mh_{p}"
-            )
-            for p in range(num_perm)
-        ]
+    mins = ", ".join(
+        f"min(pmod({ap} * __h + {bp}, {MINHASH_PRIME}))" for ap, bp in zip(a, b)
     )
-    return mins.select(
-        id_col, F.array(*[F.col(f"mh_{p}") for p in range(num_perm)]).alias("minhash")
-    )
+    return ex.groupBy(id_col).agg(F.expr(f"array({mins})").alias("minhash"))
 
 
 def _banded_rows(
@@ -212,37 +198,24 @@ def _banded_rows(
     rows: the LSH banding shared by the candidate self-join, the batch
     first-seen gate, and the streaming near-dup gate."""
     rows = num_perm // bands
-    band_of = (
-        (lambda j: F.xxhash64(j))
-        if hash_fn == "xxhash64"
-        else (lambda j: _md5_long(j))
-    )
-    # band string via positional gets + concat_ws, not
-    # array_join(slice(...)): same interpreted-lambda allocation cost as
-    # the shingle build (slice copies an array per band per doc);
-    # byte-identical output — every slice element exists (num_perm =
-    # bands*rows) and both forms render the values comma-joined.
+    band_of = F.xxhash64 if hash_fn == "xxhash64" else _md5_long
+    # The band loop is one parsed expression: a Python lambda over Column
+    # objects costs round trips per band row (see minhash_signatures).
+    # Band string via positional gets + concat_ws, not
+    # array_join(slice(...)): slice allocates an array per band per doc
+    # inside the interpreted lambda; byte-identical output — every slice
+    # element exists (num_perm = bands*rows) and both forms render the
+    # values comma-joined. The string is hashed outside the lambda, by
+    # the same Column helpers every other md5/xxhash64 operator uses.
+    band_str = ", ".join(f"get(minhash, b * {rows} + {j})" for j in range(rows))
+    cols = [F.col(id_col), *[F.col(c) for c in extra_cols]]
     return sig.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band_idx"),
-                    band_of(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.get("minhash", b * rows + F.lit(j))
-                                for j in range(rows)
-                            ],
-                        )
-                    ).alias("band_hash"),
-                ),
-            )
-        ).alias("band"),
-    ).select(id_col, *extra_cols, "band.band_idx", "band.band_hash")
+        *cols,
+        F.expr(
+            f"inline(transform(sequence(0, {bands - 1}), b -> struct("
+            f"b AS band_idx, concat_ws(',', {band_str}) AS __band)))"
+        ),
+    ).select(*cols, "band_idx", band_of(F.col("__band")).alias("band_hash"))
 
 
 def near_dedup_first_seen(

@@ -486,6 +486,7 @@ def stream_dedup_neardup(
             batch_df.select(F.col(id_col), F.col(ts_col).alias("__ts")), on=id_col
         )
         banded = banded.persist()
+        store_cols = (id_col, "band_idx", "band_hash", "__ts")
         try:
             dropped = []
             # first batch: the store doesn't exist yet (and its partition
@@ -496,8 +497,15 @@ def stream_dedup_neardup(
             # (corrupt store, transient FS error) must fail the batch so
             # the checkpoint retries it, instead of silently skipping the
             # cross-batch check and letting duplicates through for good.
+            # The store's schema is declared, not inferred: it is exactly
+            # what step 4 appends (the batch's band rows plus the
+            # __batch_id partition column), and inference would cost a
+            # footer-reading Spark job on every batch. A declared schema
+            # still checks that the path exists, and a corrupt file still
+            # fails the batch when the probe reads it.
+            store_schema = banded.select(*store_cols).schema.add("__batch_id", "long")
             try:
-                seen = batch_df.sparkSession.read.parquet(store_path)
+                seen = batch_df.sparkSession.read.schema(store_schema).parquet(store_path)
             except AnalysisException as exc:
                 msg = str(exc)
                 if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
@@ -516,16 +524,21 @@ def stream_dedup_neardup(
                             F.col("__ts")
                             >= F.lit(hi) - F.expr(f"INTERVAL {horizon_s} SECONDS")
                         )
-                # NOTE: a broadcast-the-batch-buckets formulation (probe
-                # the store map-side against a broadcast of the batch's
-                # bands, then probe banded against the colliding set) was
-                # tried here and measured SLOWER at 50k-doc batches
-                # (3.0 s -> 3.5 s/batch): the two broadcast builds are
-                # blocking driver round-trips on the batch critical
-                # path. The shuffled semi join stays; its store side is
+                # The probe's join strategy follows the store's size.
+                # While the pruned store side's size estimate is under the
+                # session's autoBroadcastJoinThreshold (64 MB from
+                # get_spark), the planner BROADCASTS THE STORE: at the
+                # perfbench stream_gate size (2.9e5 store rows, a 2.7 MB
+                # store) the final plan is a broadcast left-semi hash join
+                # rebuilt every batch. Past the threshold it becomes a
+                # shuffled (sort-merge) semi join whose store side is
                 # partition-pruned (__batch_id) and horizon-filtered, so
                 # the shuffled bytes are bounded by the gate's own state
-                # bound.
+                # bound. Broadcasting the BATCH's buckets instead (probe
+                # the store map-side, then probe banded against the
+                # colliding set) was measured slower at 50k-doc batches
+                # (3.0 s -> 3.5 s/batch): its two broadcast builds are
+                # blocking driver round trips on the batch critical path.
                 dropped.append(
                     banded.join(
                         seen.select("band_idx", "band_hash"),
@@ -565,7 +578,7 @@ def stream_dedup_neardup(
                 # band rows are ~24 B each so a handful of files per
                 # batch is the right size. Parameterised for bigger
                 # batches via store_files_per_batch.
-                banded.select(id_col, "band_idx", "band_hash", "__ts")
+                banded.select(*store_cols)
                 .coalesce(max(1, store_files_per_batch))
                 .withColumn("__batch_id", F.lit(batch_id))
                 .write.mode("overwrite")

@@ -751,3 +751,79 @@ def test_minhash_lsh_candidates_giant_bucket_blocked_path(spark):
     assert blocked.exceptAll(base).count() == 0
     # the identical family alone contributes 40*39/2 pairs
     assert base.count() >= 780
+
+
+def test_minhash_plan_build_round_trips_flat_in_num_perm(spark, monkeypatch):
+    """Building the MinHash + banding plan costs driver->JVM round trips
+    that do not grow with num_perm: the streaming gate rebuilds this plan
+    on every micro-batch, and a Column object per permutation cost
+    thousands of Py4J commands (~0.8 s) before any data moved. Counts the
+    gateway client's commands while only the plan is built — no job runs."""
+    from py4j import protocol
+
+    from featureengineer_spark.operators.dedup import _banded_rows, minhash_signatures
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "e f g"), (3, None)], "doc_id long, text string"
+    )
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    sent = {"n": 0}
+
+    def counting(command, *args, **kwargs):
+        # object-release commands follow Python's GC, not the plan build
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent["n"] += 1
+        return orig(command, *args, **kwargs)
+
+    def trips(num_perm):
+        sent["n"] = 0
+        _banded_rows(
+            minhash_signatures(df, num_perm=num_perm), "doc_id", num_perm, 8, "xxhash64"
+        )
+        return sent["n"]
+
+    monkeypatch.setattr(client, "send_command", counting)
+    trips(16)  # one-off lookups (class and function resolution)
+    small, large = trips(16), trips(128)
+    assert large <= small + 8, (small, large)
+
+
+# Edge documents for the pinned signatures: empty, punctuation only,
+# fewer words than either shingle size, NULL text, non-ASCII, normal.
+PINNED_DOCS = [
+    (1, ""),
+    (2, "!!! ??? ... --- ;; ()"),
+    (3, "Hello, world"),
+    (4, None),
+    (5, "Ça c'est très naïve: 東京タワー façade résumé coöperate déjà vu über Straße 2024"),
+    (6, "The quick brown fox jumps over the lazy dog while the old cat sleeps by the fire"),
+]
+
+
+@pytest.mark.parametrize(
+    "hash_fn,num_perm,bands,shingle",
+    [(h, *cfg) for h in ("xxhash64", "md5") for cfg in ((64, 16, 3), (16, 8, 5))],
+)
+def test_minhash_signatures_and_bands_pinned(spark, hash_fn, num_perm, bands, shingle):
+    """Signatures and band rows are pinned to literals captured from the
+    per-permutation Column formulation, so any re-formulation of the
+    plan must stay bit-identical (the band store written by earlier
+    gate runs is probed with these hashes). Docs without a shingle —
+    empty, punctuation-only, NULL — get no signature and no band row."""
+    import json
+    import os
+
+    from featureengineer_spark.operators.dedup import _banded_rows, minhash_signatures
+
+    path = os.path.join(os.path.dirname(__file__), "data", "minhash_pinned.json")
+    with open(path) as f:
+        want = json.load(f)[f"{hash_fn}/{num_perm}/{bands}/{shingle}"]
+    df = spark.createDataFrame(PINNED_DOCS, "doc_id long, text string")
+    sig = minhash_signatures(df, num_perm=num_perm, shingle=shingle, hash_fn=hash_fn)
+    got_sig = {str(r.doc_id): list(r.minhash) for r in sig.collect()}
+    assert got_sig == want["minhash"]
+    got_bands = sorted(
+        list(r) for r in _banded_rows(sig, "doc_id", num_perm, bands, hash_fn).collect()
+    )
+    assert got_bands == want["band_rows"]
