@@ -10,6 +10,11 @@ import json
 import logging
 
 
-def log_event(logger: logging.Logger, event: str, **fields) -> None:
-    """Write ``{"event": event, **fields}`` as one WARNING line."""
-    logger.warning(json.dumps({"event": event, **fields}, sort_keys=True, default=str))
+def log_event(
+    logger: logging.Logger, event: str, level: int = logging.WARNING, **fields
+) -> None:
+    """Write ``{"event": event, **fields}`` as one line at ``level``:
+    WARNING (the default) for fallbacks, INFO for routine routing
+    decisions."""
+    if logger.isEnabledFor(level):
+        logger.log(level, json.dumps({"event": event, **fields}, sort_keys=True, default=str))

@@ -4,8 +4,12 @@ Graft of the reference's per-segment numpy kernels — posterior+stat0/stat1
 per segment with the UBM broadcast to every worker (``IVector.py:806-815``,
 ``mpiIV.py:241,400``): here :func:`featurize_fast` streams conv-sorted
 Arrow batches through one segmented numpy kernel that turns each turn
-into a fixed-dim ``feature_vec``, with the (small, dense) projection
-model held in a Spark broadcast variable, never a DataFrame.
+into a fixed-dim ``feature_vec``. The small dense projection (8×8
+doubles, 512 bytes) rides in the kernel's closure, pickled with the
+function itself; there is no Spark broadcast variable. A broadcast would
+need an owner to destroy it, and its per-call id would make every call a
+different plan, so two calls on the same input and model could not share
+a plan-keyed memo (the as-of router's heavy-key probe) or cache entry.
 
 The kernel is leakage-safe: normalization is *expanding* (statistics over
 rows at-or-before the current turn only, under stable ``(ts, turn_idx)``
@@ -29,7 +33,8 @@ FEATURE_DIM = 8
 
 @dataclass
 class FeatureModel:
-    """Small dense model state, broadcast to executors (X4 graft).
+    """Small dense model state, shipped to executors in the kernel's
+    closure (X4 graft).
 
     ``proj`` plays the role of the reference's TV matrix — a fixed dense
     projection applied to every per-turn statistics vector.
@@ -157,9 +162,7 @@ def featurize_fast(
       reference's MPI path (``mpiIV.py:160-214``) as a partition scan.
     """
     model = model or FeatureModel()
-    sc = df.sparkSession.sparkContext
-    b_proj = sc.broadcast(model.proj)
-    parts = partitions or sc.defaultParallelism * 2
+    proj = model.proj
 
     text = F.coalesce(F.col("text"), F.lit(""))
     trimmed = F.trim(text)
@@ -195,6 +198,7 @@ def featurize_fast(
         # validation.assert_clustered (partition-granularity check).
         prepped = pre.sortWithinPartitions("conv_id", "ts", "turn_idx")
     else:
+        parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2
         prepped = pre.repartition(parts, "conv_id").sortWithinPartitions(
             "conv_id", "ts", "turn_idx"
         )
@@ -212,7 +216,6 @@ def featurize_fast(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        proj = b_proj.value
         carry: _Carry | None = None
         for batch in batches:
             n = batch.num_rows

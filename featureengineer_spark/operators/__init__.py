@@ -19,7 +19,6 @@ from featureengineer_spark.operators.windows import (  # noqa: F401
 from featureengineer_spark.operators.asof import (  # noqa: F401
     asof_join,
     asof_join_auto,
-    asof_join_pandas,
     salted_asof_join,
 )
 from featureengineer_spark.operators.skew import (  # noqa: F401

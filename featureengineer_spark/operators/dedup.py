@@ -427,6 +427,8 @@ def minhash_lsh_candidates(
         if not ids_parts:
             return
         ids = pa.concat_arrays(ids_parts).to_numpy(zero_copy_only=False)
+        if len(ids) == 0:  # only zero-row batches: reshape(0, -1) would raise
+            return
         mh = np.concatenate(mh_parts).reshape(len(ids), -1)
         bi = np.concatenate(bi_parts)
         bh = np.concatenate(bh_parts)

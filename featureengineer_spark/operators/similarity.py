@@ -656,7 +656,7 @@ def build_ivf_index(
         .partitionBy("list_id")
         .parquet(path)
     )
-    id_type = dict(corpus.dtypes)[id_col]
+    dtypes = dict(corpus.dtypes)
     meta = {
         "n_lists": int(centroids.shape[0]),
         "dim": int(centroids.shape[1]),
@@ -666,7 +666,7 @@ def build_ivf_index(
         # the per-call parquet footer/schema-inference job (~0.1-0.2 s
         # per search call at the bench shape)
         "schema_ddl": (
-            f"`{id_col}` {id_type}, `{vec_col}` array<double>, list_id int"
+            f"`{id_col}` {dtypes[id_col]}, `{vec_col}` {dtypes[vec_col]}, list_id int"
         ),
         "centroids": [float(v) for v in centroids.ravel()],
     }

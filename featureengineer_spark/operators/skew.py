@@ -73,12 +73,13 @@ def detect_heavy_keys(
     return df.groupBy(key).count().filter(F.col("count") > threshold)
 
 
-#: session-lifetime memo for the auto-routers' heavy-key probe:
-#: (session token, plan semanticHash, key, threshold,
+#: context-lifetime memo for the auto-routers' heavy-key probe:
+#: (context token, plan semanticHash, key, threshold,
 #: sample_denominator) → bool. N auto ops over the same table fire ONE
-#: probe job, not N. Session identity comes from
-#: ``session.probe_token`` — stable, never reused after GC (``id()``
-#: can be).
+#: probe job, not N, across every session of one SparkContext (the
+#: per-call child sessions of ``sources.io.read_clustered`` included).
+#: The token comes from ``session.probe_token`` — stable, never reused
+#: after GC (``id()`` can be).
 _HEAVY_PROBE_CACHE: dict[tuple, bool] = {}
 _HEAVY_PROBE_CACHE_MAX = 256
 
@@ -91,11 +92,27 @@ def has_heavy_keys(
     use_cache: bool = True,
 ) -> bool:
     """Driver-side boolean the auto-routers branch on: does any entity
-    exceed ``threshold`` rows? Memoized per (session, analyzed-plan
-    ``semanticHash``, key, threshold, denominator) so repeated auto calls
-    on the same table cost one probe job per session. The memo keys on
-    the logical plan, not the data — for a table whose files mutate
-    between calls within one session, pass ``use_cache=False``."""
+    exceed ``threshold`` rows? Memoized per (SparkContext, analyzed-plan
+    ``semanticHash``, key, threshold, denominator), so repeated auto
+    calls on the same plan cost one probe job per context, whichever
+    session built the plan. The memo keys on the logical plan, not the
+    data: for a table whose files are rewritten under the same path
+    while the context lives, the verdict can be stale. A stale verdict
+    changes only the route an auto-router takes, never its rows (the
+    salted and plain paths are exactly equal); pass ``use_cache=False``
+    to re-probe anyway."""
+    return _heavy_verdict(df, key, threshold, sample_denominator, use_cache)[0]
+
+
+def _heavy_verdict(
+    df: DataFrame,
+    key: str,
+    threshold: int,
+    sample_denominator: int | None,
+    use_cache: bool = True,
+) -> tuple[bool, str]:
+    """:func:`has_heavy_keys` plus what answered it: ``"memo"`` or
+    ``"probe"`` (a Spark job ran)."""
     from featureengineer_spark.session import probe_token
 
     ck = (
@@ -106,7 +123,7 @@ def has_heavy_keys(
         sample_denominator,
     )
     if use_cache and ck in _HEAVY_PROBE_CACHE:
-        return _HEAVY_PROBE_CACHE[ck]
+        return _HEAVY_PROBE_CACHE[ck], "memo"
     out = bool(
         detect_heavy_keys(
             df, key=key, threshold=threshold, sample_denominator=sample_denominator
@@ -118,7 +135,7 @@ def has_heavy_keys(
         if len(_HEAVY_PROBE_CACHE) >= _HEAVY_PROBE_CACHE_MAX:
             _HEAVY_PROBE_CACHE.pop(next(iter(_HEAVY_PROBE_CACHE)))
         _HEAVY_PROBE_CACHE[ck] = out
-    return out
+    return out, "probe"
 
 
 def salted_rolling_counts(

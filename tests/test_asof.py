@@ -1,12 +1,12 @@
-"""As-of / point-in-time join: both physical strategies vs the naive
-pandas spec, plus the temporal-leakage property (SURVEY.md §5.3)."""
+"""As-of / point-in-time join: the window and salted strategies vs the
+naive pandas spec, plus the temporal-leakage property (SURVEY.md §5.3)."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
 
-from featureengineer_spark.operators import asof_join, asof_join_pandas
+from featureengineer_spark.operators import asof_join
 from featureengineer_spark.oracle import oracle_asof
 
 VALUE_COLS = ["turn_idx", "role", "tool"]
@@ -26,7 +26,7 @@ def expected(transcripts_pdf, anchors_pdf):
     return _norm(oracle_asof(transcripts_pdf, anchors_pdf, VALUE_COLS))
 
 
-@pytest.mark.parametrize("impl", [asof_join, asof_join_pandas])
+@pytest.mark.parametrize("impl", [asof_join])
 def test_asof_matches_oracle(impl, transcripts, anchors, anchors_pdf, expected):
     got = impl(
         transcripts,
@@ -38,7 +38,7 @@ def test_asof_matches_oracle(impl, transcripts, anchors, anchors_pdf, expected):
     pd.testing.assert_frame_equal(got, expected, check_dtype=False)
 
 
-@pytest.mark.parametrize("impl", [asof_join, asof_join_pandas])
+@pytest.mark.parametrize("impl", [asof_join])
 def test_asof_strict_excludes_equal_ts(impl, transcripts, anchors, transcripts_pdf, anchors_pdf):
     got = _norm(
         impl(transcripts, anchors, value_cols=VALUE_COLS, inclusive=False).toPandas()
@@ -47,7 +47,7 @@ def test_asof_strict_excludes_equal_ts(impl, transcripts, anchors, transcripts_p
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
-@pytest.mark.parametrize("impl", [asof_join, asof_join_pandas])
+@pytest.mark.parametrize("impl", [asof_join])
 def test_no_temporal_leakage(impl, transcripts, anchors):
     """Property: no matched feature row has ts > its anchor (the north
     rule's zero-temporal-leakage gate)."""
@@ -114,7 +114,7 @@ def test_non_causal_provenance_guard(spark, transcripts):
     from pyspark.sql import functions as F
 
     from featureengineer_spark.operators import asof_join
-    from featureengineer_spark.operators.asof import asof_join_pandas, salted_asof_join
+    from featureengineer_spark.operators.asof import salted_asof_join
     from featureengineer_spark.operators.windows import with_sliding_norm
     from featureengineer_spark.validation import non_causal_columns
 
@@ -128,7 +128,7 @@ def test_non_causal_provenance_guard(spark, transcripts):
     assert non_causal_columns(carried) == ["x_centered"]
 
     anchors = transcripts.groupBy("conv_id").agg(F.max("ts").alias("anchor_ts"))
-    for fn in (asof_join, asof_join_pandas, salted_asof_join):
+    for fn in (asof_join, salted_asof_join):
         with pytest.raises(ValueError, match="non-causal"):
             fn(carried, anchors, value_cols=["x_centered"])
     # trailing column passes; explicit override allows offline parity runs
@@ -158,13 +158,13 @@ def _forward_oracle(transcripts_pdf, anchors_pdf, inclusive=True):
     return pd.DataFrame(rows)
 
 
-@pytest.mark.parametrize("impl", [asof_join, asof_join_pandas])
+@pytest.mark.parametrize("impl", [asof_join])
 @pytest.mark.parametrize("inclusive", [True, False])
 def test_asof_forward_matches_naive_spec(impl, inclusive, transcripts, anchors,
                                          transcripts_pdf, anchors_pdf):
     """direction='forward' == the naive next-event spec (earliest
-    (ts, tie) at-or-after the anchor), both physical strategies, both
-    inclusivity modes; no matched row may precede its anchor."""
+    (ts, tie) at-or-after the anchor), both inclusivity modes; no
+    matched row may precede its anchor."""
     out = impl(
         transcripts, anchors, value_cols=VALUE_COLS,
         direction="forward", inclusive=inclusive,
@@ -233,3 +233,57 @@ def test_asof_auto_forward_routes_salted(transcripts, anchors, transcripts_pdf, 
     )
     exp = _norm(_forward_oracle(transcripts_pdf, anchors_pdf))
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+
+
+def test_asof_plan_build_round_trips(spark, monkeypatch):
+    """A ``get_spark`` session builds an as-of join plan without per-call
+    call-site capture: over a 3-row frame the build costs under half the
+    549 Py4J round trips it took with DataFrame debugging on. Builds
+    only; no job runs."""
+    from py4j import protocol
+    from pyspark.sql import functions as F
+
+    feats = spark.createDataFrame(
+        [("a", 1, 0), ("a", 2, 1), ("b", 1, 0)], "conv_id string, turn_idx int, s int"
+    ).select("conv_id", "turn_idx", F.timestamp_seconds("s").alias("ts"))
+    anchors = spark.createDataFrame([("a", 5)], "conv_id string, s int").select(
+        "conv_id", F.timestamp_seconds("s").alias("anchor_ts")
+    )
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    sent = {"n": 0}
+
+    def counting(command, *args, **kwargs):
+        # object-release commands follow Python's GC, not the plan build
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent["n"] += 1
+        return orig(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    asof_join(feats, anchors, value_cols=["turn_idx"])  # one-off lookups
+    sent["n"] = 0
+    asof_join(feats, anchors, value_cols=["turn_idx"])
+    assert sent["n"] < 549 // 2, sent["n"]
+
+
+def test_asof_auto_logs_route(transcripts, anchors, caplog):
+    """Every auto call writes one INFO ``asof_route`` line: the route,
+    the threshold, and whether a probe job or the memo answered."""
+    import json
+    import logging
+
+    from featureengineer_spark.operators import skew
+    from featureengineer_spark.operators.asof import asof_join_auto
+
+    skew._HEAVY_PROBE_CACHE.clear()
+    with caplog.at_level(logging.INFO, logger="featureengineer_spark.operators.asof"):
+        asof_join_auto(transcripts, anchors, heavy_threshold=10**9, value_cols=VALUE_COLS)
+        asof_join_auto(transcripts, anchors, heavy_threshold=10**9, value_cols=VALUE_COLS)
+        asof_join_auto(transcripts, anchors, heavy_threshold=500, value_cols=VALUE_COLS)
+    recs = [json.loads(r.getMessage()) for r in caplog.records if "asof_route" in r.getMessage()]
+    assert all(r.levelno == logging.INFO for r in caplog.records if "asof_route" in r.getMessage())
+    assert [(r["route"], r["heavy_threshold"], r["answered_by"]) for r in recs] == [
+        ("plain", 10**9, "probe"),
+        ("plain", 10**9, "memo"),
+        ("salted", 500, "probe"),
+    ]

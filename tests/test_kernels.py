@@ -87,6 +87,19 @@ def test_featurize_fast_clustered_allclose(spark, transcripts, transcripts_pdf, 
     )
 
 
+
+def test_featurize_fast_same_plan_per_call(spark, transcripts):
+    """Two calls on the same input and model build the same plan, so a
+    plan-keyed memo (the heavy-key probe) or cache entry can hit; a
+    different projection is a different plan."""
+    from featureengineer_spark.kernels import FeatureModel
+
+    a = featurize_fast(transcripts, clustered=True)
+    b = featurize_fast(transcripts, clustered=True)
+    assert a.semanticHash() == b.semanticHash()
+    other = featurize_fast(transcripts, model=FeatureModel(proj=np.eye(FEATURE_DIM)), clustered=True)
+    assert other.semanticHash() != a.semanticHash()
+
 def test_learn_feature_model_whitens(spark, transcripts):
     """The data-learned FeatureModel must plug into featurize unchanged
     and produce identity-covariance features (decorrelation by

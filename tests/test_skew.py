@@ -266,3 +266,35 @@ def test_heavy_probe_memoized_across_auto_calls(spark, monkeypatch):
     # bypass works and the memo answers stay correct
     assert skew.has_heavy_keys(df, threshold=50_000, use_cache=False) is False
     assert calls["n"] == 2
+
+
+def test_heavy_probe_memoized_across_read_clustered_passes(spark, transcripts, tmp_path, monkeypatch):
+    """A refresh pass re-reads the store (``read_clustered`` builds a new
+    child session per call), re-featurizes and re-joins: two such passes
+    fire ONE heavy-key probe, because the memo is keyed per SparkContext
+    and the featurized plan is the same on every call."""
+    from pyspark.sql import functions as F
+
+    from featureengineer_spark.kernels import featurize_fast
+    from featureengineer_spark.operators import skew
+    from featureengineer_spark.operators.asof import asof_join_auto
+    from featureengineer_spark.sources.io import read_clustered, write_transcripts_partitioned
+
+    path = str(tmp_path / "store")
+    write_transcripts_partitioned(transcripts, path, conv_buckets=4)
+    anchors = transcripts.groupBy("conv_id").agg(F.max("ts").alias("anchor_ts"))
+    calls = {"n": 0}
+    real = skew.detect_heavy_keys
+
+    def counting(*a, **k):
+        calls["n"] += 1
+        return real(*a, **k)
+
+    monkeypatch.setattr(skew, "detect_heavy_keys", counting)
+    skew._HEAVY_PROBE_CACHE.clear()
+    outs = []
+    for _ in range(2):
+        feats = featurize_fast(read_clustered(spark, path), clustered=True)
+        outs.append(asof_join_auto(feats, anchors, value_cols=["turn_idx"]))
+    assert calls["n"] == 1
+    assert outs[1].count() == anchors.count()
