@@ -190,12 +190,14 @@ def featurize_fast(
         # Input is already conv-clustered (Iceberg bucket(N, conv_id)
         # layout: every conversation wholly inside one input split, the
         # engine's production table layout) → NO exchange at all; only a
-        # local sort. Caller must ensure file splits don't break a
-        # conversation (bucketed writes + maxPartitionBytes ≥ file size);
-        # note Spark splits single files LARGER than maxPartitionBytes
+        # local sort. A split may hold several whole bucket files (as
+        # sources.io.read_clustered packs them, about one split per
+        # core); the kernel only needs no conversation cut between two
+        # splits. Spark cuts a single file LARGER than its split size
         # into several tasks, which keeps one input_file_name but breaks
-        # the carry chain — gate a new layout once with
-        # validation.assert_clustered (partition-granularity check).
+        # the carry chain — read with read_clustered, and gate a new
+        # layout once with validation.assert_clustered
+        # (partition-granularity check).
         prepped = pre.sortWithinPartitions("conv_id", "ts", "turn_idx")
     else:
         parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2

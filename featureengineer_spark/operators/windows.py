@@ -38,8 +38,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
-from featureengineer_spark.functions.scalars import epoch_micros
-
 
 def turn_window(
     entity_col: str = "conv_id",
@@ -49,6 +47,45 @@ def turn_window(
     ``(ts, turn_idx)`` — the "stable turn ordering" invariant from
     ``BASELINE.json:input_hint``."""
     return Window.partitionBy(entity_col).orderBy(*[F.col(c).asc() for c in order_cols])
+
+
+def _q(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _over(
+    entity_col: str, order_cols: Sequence[str], preceding: int | None = -1
+) -> str:
+    """SQL ``OVER`` clause of ``turn_window``, with a ``ROWS`` frame that
+    ends at the current row and starts at the first row
+    (``preceding=None``) or ``k >= 0`` rows back; ``-1`` adds no frame.
+
+    The window operators build their columns as parsed SQL expressions:
+    one ``expr`` per column costs a few Py4J round trips, while the
+    Column API costs one per ``col``/``lag``/``when``/``lit``/``over``
+    node, and plan building was the larger share of a small stack's
+    cost."""
+    order = ", ".join(f"{_q(c)} ASC" for c in order_cols)
+    frame = ""
+    if preceding is None:
+        frame = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    elif preceding >= 0:
+        start = f"{preceding} PRECEDING" if preceding else "CURRENT ROW"
+        frame = f" ROWS BETWEEN {start} AND CURRENT ROW"
+    return f"OVER (PARTITION BY {_q(entity_col)} ORDER BY {order}{frame})"
+
+
+def _gap_s(ts_col: str, over: str) -> str:
+    """Seconds since the previous row's ``ts_col``: integer-microsecond
+    subtraction, then scale (``functions.scalars.epoch_micros``; casting
+    each timestamp to double first loses ~1e-7 s at 2024 epoch
+    magnitudes)."""
+    ts = _q(ts_col)
+    return (
+        f"(unix_micros(CAST({ts} AS TIMESTAMP))"
+        f" - unix_micros(CAST(lag({ts}) {over} AS TIMESTAMP))) / 1e6"
+    )
 
 
 def with_lags(
@@ -66,14 +103,14 @@ def with_lags(
     they must not feed point-in-time features (the leakage validator
     flags them) — they exist for offline label construction.
     """
-    w = turn_window(entity_col, order_cols)
-    out = df
+    over = _over(entity_col, order_cols)
+    new = {}
     for c in cols:
         for n in offsets:
-            out = out.withColumn(f"lag{n}_{c}", F.lag(c, n).over(w))
+            new[f"lag{n}_{c}"] = F.expr(f"lag({_q(c)}, {int(n)}) {over}")
             if leads:
-                out = out.withColumn(f"lead{n}_{c}", F.lead(c, n).over(w))
-    return out
+                new[f"lead{n}_{c}"] = F.expr(f"lead({_q(c)}, {int(n)}) {over}")
+    return df.withColumns(new)
 
 
 def with_inter_turn_latency(
@@ -84,13 +121,7 @@ def with_inter_turn_latency(
     out_col: str = "inter_turn_latency_s",
 ) -> DataFrame:
     """Seconds since the previous turn within the conversation."""
-    w = turn_window(entity_col, order_cols)
-    prev = F.lag(F.col(ts_col)).over(w)
-    # integer-microsecond subtraction, then scale: exact (casting each
-    # timestamp to double first loses ~1e-7 s at 2024 epoch magnitudes)
-    return df.withColumn(
-        out_col, (epoch_micros(F.col(ts_col)) - epoch_micros(prev)) / 1e6
-    )
+    return df.withColumn(out_col, F.expr(_gap_s(ts_col, _over(entity_col, order_cols))))
 
 
 def with_rolling_counts(
@@ -108,16 +139,16 @@ def with_rolling_counts(
 
         {"rolling_assistant_turns_10": F.col("role") == "assistant"}
     """
-    w = turn_window(entity_col, order_cols).rowsBetween(-(window - 1), 0)
-    # single projection → Catalyst fuses all sums into ONE Window node
+    # predicates land in temporary columns so the window sums are parsed
+    # SQL; one projection → Catalyst fuses all sums into ONE Window node
     # (sequential withColumn produces one Window pass per predicate)
-    return df.select(
-        "*",
-        *[
-            F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0))).over(w).alias(name)
-            for name, pred in predicates.items()
-        ],
-    )
+    over = _over(entity_col, order_cols, preceding=window - 1)
+    tmp = {f"__rc{i}": pred for i, pred in enumerate(predicates.values())}
+    sums = [
+        f"sum(CASE WHEN {t} THEN 1 ELSE 0 END) {over} AS {_q(name)}"
+        for t, name in zip(tmp, predicates)
+    ]
+    return df.withColumns(tmp).selectExpr("*", *sums).drop(*tmp)
 
 
 def default_rolling_predicates() -> dict[str, Column]:
@@ -138,10 +169,8 @@ def with_backfill(
     """Forward-fill a sparse column with the last non-null value at or
     before the current row (W8 edge-padding graft). Frame ends at
     currentRow — never reads the future."""
-    w = turn_window(entity_col, order_cols).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(
-        out_col or f"{col}_backfilled", F.last(col, ignorenulls=True).over(w)
-    )
+    over = _over(entity_col, order_cols, preceding=None)
+    return df.withColumn(out_col or f"{col}_backfilled", F.expr(f"last({_q(col)}, true) {over}"))
 
 
 def with_session_ids(
@@ -160,13 +189,16 @@ def with_session_ids(
     a signal into speech segments (``FeaGet.py:292-297``); here idle gaps
     split a conversation into sessions.
     """
-    w = turn_window(entity_col, order_cols)
-    gap = (epoch_micros(F.col(ts_col)) - epoch_micros(F.lag(F.col(ts_col)).over(w))) / 1e6
-    is_new = F.when(gap > idle_timeout_s, F.lit(1)).otherwise(F.lit(0))
-    wc = turn_window(entity_col, order_cols).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn("_new_sess", is_new).withColumn(
-        out_col, F.sum("_new_sess").over(wc).cast("long")
-    ).drop("_new_sess")
+    gap = _gap_s(ts_col, _over(entity_col, order_cols))
+    # the exact double, as a string cast: a bare ``1800.0`` parses as DECIMAL
+    idle = f"CAST('{float(idle_timeout_s)!r}' AS DOUBLE)"
+    is_new = f"CASE WHEN {gap} > {idle} THEN 1 ELSE 0 END"
+    running = f"CAST(sum(`_new_sess`) {_over(entity_col, order_cols, preceding=None)} AS BIGINT)"
+    return (
+        df.withColumn("_new_sess", F.expr(is_new))
+        .withColumn(out_col, F.expr(running))
+        .drop("_new_sess")
+    )
 
 
 def with_sliding_norm(

@@ -54,26 +54,101 @@ def read_transcripts(
     return spark.read.format(file_format).load(path).drop("ts_day", "conv_bucket")
 
 
-def _pinned_split_session(spark: SparkSession, cap: str) -> SparkSession:
-    """Child session with ``spark.sql.files.maxPartitionBytes`` AND
-    ``openCostInBytes`` pinned to ``cap`` (cap bounds the split size,
-    the open-cost floor stops small files being coalesced-split at the
-    4 MB default: maxSplitBytes = min(cap, max(floor, bytesPerCore))).
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule for names it skips (``_SUCCESS``,
+    ``_temporary``, ``.crc`` files, uploads in progress); ``_`` names
+    holding ``=`` are partition directories and are kept."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _list_data_files(spark: SparkSession, path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(relative path, bytes, mtime)`` of every data file Spark would
+    read under ``path``, sorted. A bare local path is walked with
+    ``os``; a URI root (``file:``, ``hdfs://``, ``s3a://`` …) is listed
+    through Hadoop's ``FileSystem`` API. Raises ``FileNotFoundError``
+    when the root holds no data file."""
+    import os
+    from urllib.parse import urlparse
+
+    found = []
+    if not urlparse(path).scheme:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            found.append(("", st.st_size, st.st_mtime_ns))
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for f in files:
+                if not _hidden(f):
+                    full = os.path.join(root, f)
+                    st = os.stat(full)
+                    found.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    else:
+        jvm = spark.sparkContext._jvm
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        base = fs.makeQualified(p).toUri().getPath().rstrip("/")
+        it = fs.listFiles(p, True)
+        while it.hasNext():
+            st = it.next()
+            rel = st.getPath().toUri().getPath()[len(base):].lstrip("/")
+            if not any(_hidden(part) for part in rel.split("/") if part):
+                found.append((rel, st.getLen(), st.getModificationTime()))
+    if not found:
+        raise FileNotFoundError(f"read_clustered: no data files under {path!r}")
+    return tuple(sorted(found))
+
+
+def _pinned_split_session(spark: SparkSession, split_bytes: int) -> SparkSession:
+    """Child session whose file-split confs pack WHOLE files into scan
+    partitions: ``maxPartitionBytes = split_bytes`` (at least the largest
+    file), ``openCostInBytes = 0`` and ``minPartitionNum = 1``.
+
+    Spark sizes a split as ``min(maxPartitionBytes, max(openCost,
+    selectedBytes / minPartitionNum))``, so here it is ``min(split_bytes,
+    selectedBytes)``. Both terms are at least the largest SELECTED file —
+    the first by construction, the second because that file is part of
+    the selection — so no file is ever cut, also when partition pruning
+    selects only a few small buckets. Files are then packed next-fit
+    decreasing into partitions of up to that size; a file is never spread
+    over two of them. (``maxPartitionNum``, if the caller set it, only
+    re-packs the same whole files into fewer partitions.)
 
     File-split planning reads these keys from the SESSION conf at
     execution time — per-read reader options are ignored — so pinning
-    them on a child session is the only way to guarantee whole-file
-    splits without mutating the caller's session. ``cloneSession``
-    keeps the caller's runtime conf overrides (``newSession`` would
-    silently reset e.g. a runtime ``shuffle.partitions`` override back
-    to the builder value — verified empirically)."""
+    them on a child session is the only way to control splits without
+    mutating the caller's session. ``cloneSession`` keeps the caller's
+    runtime conf overrides (``newSession`` would silently reset e.g. a
+    runtime ``shuffle.partitions`` override back to the builder value —
+    verified empirically)."""
     try:
         child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
     except Exception:  # pragma: no cover - Connect / future API drift
         child = spark.newSession()
-    child.conf.set("spark.sql.files.maxPartitionBytes", cap)
-    child.conf.set("spark.sql.files.openCostInBytes", cap)
+    child.conf.set("spark.sql.files.maxPartitionBytes", str(split_bytes))
+    child.conf.set("spark.sql.files.openCostInBytes", "0")
+    child.conf.set("spark.sql.files.minPartitionNum", "1")
     return child
+
+
+#: Session confs that change what schema inference returns for the same
+#: files; part of the ``_SCHEMA_MEMO`` key.
+_INFER_CONFS = (
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+)
+#: Inferred schemas of ``read_clustered`` roots, keyed by SparkContext
+#: (``session.probe_token``), root, format, the ``_INFER_CONFS`` values
+#: and the listing stamp (every data file's path, size and mtime), so a
+#: rewritten store is inferred afresh.
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+_SCHEMA_MEMO_MAX = 64
 
 
 def read_clustered(
@@ -84,46 +159,68 @@ def read_clustered(
     entity_col: str = "conv_id",
     slack: float = 1.25,
 ) -> DataFrame:
-    """Read a conv-bucketed store with WHOLE-FILE splits guaranteed — the
-    safe input for the shuffle-free ``clustered=True`` kernels.
+    """Read a conv-bucketed store as WHOLE files packed into about
+    ``defaultParallelism`` scan partitions — the safe input for the
+    shuffle-free ``clustered=True`` kernels, which need every
+    conversation inside one partition and nothing more.
 
-    Spark splits a single file larger than the effective split size into
-    several scan partitions (maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, bytesPerCore))), which breaks a conversation's
-    carry chain MID-FILE while keeping one ``input_file_name`` — the
-    failure mode ``validation.partition_clustering_violations`` detects.
-    This reader lists the store, sizes the split cap to the largest data
-    file (×``slack``), and executes the scan under a DEDICATED child
-    session whose ``spark.sql.files.maxPartitionBytes`` /
-    ``openCostInBytes`` confs are pinned to that cap, so every file is
-    one split regardless of the caller session's config or total size.
+    Spark splits a file larger than the effective split size into
+    several scan partitions, which breaks a conversation's carry chain
+    MID-FILE while keeping one ``input_file_name`` — the failure mode
+    ``validation.partition_clustering_violations`` detects. This reader
+    lists the store (``os`` for a bare path, Hadoop's ``FileSystem`` for
+    a URI root; a root with no data file raises), sets the split size to
+    ``max(largest file × slack, total bytes / defaultParallelism)`` and
+    executes the scan under a DEDICATED child session with no open cost
+    and a one-partition minimum (``_pinned_split_session``). Every file
+    is then one split whatever the caller session's config, and small
+    bucket files share a partition: each Python task of a featurizer
+    pass has a fixed cost (~50 ms on ``local[4]``), so fewer tasks is
+    the win, and the split rule stays whole-file under partition
+    pruning (see ``_pinned_split_session``).
+
     The child session is required for correctness, not hygiene:
-    per-read ``DataFrameReader.option(...)`` forms of these two keys are
+    per-read ``DataFrameReader.option(...)`` forms of these keys are
     silently IGNORED by Spark's file-split planning (splitting consults
     only the session confs ``spark.sql.files.*``, at execution time —
     verified empirically on Spark 4.1: the session conf moves a 13 MB
     file's scan between 1 and 200+ partitions while the per-read option
     changes nothing). The child is a ``cloneSession`` (shares the
     SparkContext; inherits the caller's runtime conf overrides, e.g.
-    ``shuffle.partitions``, then pins the two file confs), falling back
-    to ``newSession`` + a conf copy where the clone API is unavailable.
+    ``shuffle.partitions``, then pins the file confs), falling back to
+    ``newSession`` where the clone API is unavailable.
+
+    The inferred schema is memoized per SparkContext, root, format,
+    inference confs and listing stamp (``_SCHEMA_MEMO``), so a repeated
+    read of unchanged files runs no schema-inference job.
+
     With ``validate=True`` it additionally runs ``assert_clustered``
     (one count-distinct aggregation) before returning — use once per
     new layout. At 100 TB this is the moment to check the bucket-file
     sizes are sane (a 10 GB bucket file = a 10 GB task; rebucket
     instead of raising the split cap without thought)."""
-    import os
+    from featureengineer_spark.session import probe_token
 
-    largest = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                largest = max(largest, os.path.getsize(os.path.join(root, f)))
-    session = spark
-    if largest:
-        cap = str(int(largest * slack))
-        session = _pinned_split_session(spark, cap)
-    df = session.read.format(file_format).load(path)
+    files = _list_data_files(spark, path)
+    sizes = [size for _, size, _ in files]
+    split_bytes = max(int(max(sizes) * slack), sum(sizes) // spark.sparkContext.defaultParallelism, 1)
+    session = _pinned_split_session(spark, split_bytes)
+    key = (
+        probe_token(spark),
+        path,
+        file_format,
+        tuple(session.conf.get(k, None) for k in _INFER_CONFS),
+        files,
+    )
+    reader = session.read.format(file_format)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        df = reader.schema(schema).load(path)
+    else:
+        df = reader.load(path)
+        if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+            _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
+        _SCHEMA_MEMO[key] = df.schema
     if validate:
         from featureengineer_spark.validation import assert_clustered
 

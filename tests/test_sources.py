@@ -137,8 +137,9 @@ def test_read_clustered_whole_file_splits(spark, tmp_path):
     session whose effective split size is smaller than the bucket files,
     the plain read MUST split files mid-conversation (asserted
     unconditionally — this is what makes the test meaningful), and
-    read_clustered of the same store must still yield exactly one scan
-    partition per file with zero clustering violations. Per-read
+    read_clustered of the same store must still keep every file whole,
+    with zero clustering violations: four files of about a quarter of
+    the store each are one scan partition apiece. Per-read
     DataFrameReader options cannot achieve this (Spark's file-split
     planning consults only the session confs spark.sql.files.*), which
     is why read_clustered executes under a conf-pinned child session."""
@@ -172,7 +173,8 @@ def test_read_clustered_whole_file_splits(spark, tmp_path):
         assert plain.rdd.getNumPartitions() > 4  # files actually split…
         assert partition_clustering_violations(plain).count() > 0  # …mid-conv
         # read_clustered under the SAME hostile session: one partition per
-        # file (openCost=cap stops multi-file packing, cap stops splitting)
+        # file (the split size is at most the largest file ×1.25, so no two
+        # of these near-equal files fit one partition, and none is cut)
         clustered = read_clustered(spark, path, validate=True)
         assert clustered.rdd.getNumPartitions() == 4
         assert partition_clustering_violations(clustered).count() == 0
@@ -181,3 +183,160 @@ def test_read_clustered_whole_file_splits(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_max)
         spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
+
+
+def _hostile_split_confs(spark):
+    """Set a caller session whose split size is far below the test files;
+    returns a restore callable."""
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    prev = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], str(256 * 1024))
+    spark.conf.set(keys[1], str(16 * 1024))
+
+    def restore():
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+
+    return restore
+
+
+def _file_spread(df):
+    """Largest number of scan partitions any one file's rows land in."""
+    return (
+        df.select(F.input_file_name().alias("f"), F.spark_partition_id().alias("p"))
+        .groupBy("f")
+        .agg(F.countDistinct("p").alias("n"))
+        .agg(F.max("n"))
+        .first()[0]
+    )
+
+
+def test_read_clustered_packs_mixed_file_sizes(spark, tmp_path):
+    """Whole bucket files are PACKED: 3 large multi-row-group files and
+    13 small ones make at most ``defaultParallelism + 2`` scan
+    partitions (one file per partition would be 16), under a caller
+    session whose split size would cut every large file, with every
+    conversation still inside one partition."""
+    from featureengineer_spark.sources.io import read_clustered
+    from featureengineer_spark.validation import partition_clustering_violations
+
+    path = str(tmp_path / "mixed_store")
+    conv = F.when(F.col("id") < 108_000, F.col("id") % 3).otherwise(3 + F.col("id") % 13)
+    (
+        spark.range(120_000)
+        .select(
+            F.concat(F.lit("c"), conv.cast("string")).alias("conv_id"),
+            F.col("id").cast("int").alias("turn_idx"),
+            F.sha2(F.col("id").cast("string"), 256).alias("text"),
+        )
+        .repartition("conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.option("parquet.block.size", 64 * 1024)
+        .partitionBy("conv_id")
+        .parquet(path)
+    )
+    restore = _hostile_split_confs(spark)
+    try:
+        assert spark.read.parquet(path).rdd.getNumPartitions() > 16  # plain read cuts files
+        df = read_clustered(spark, path)
+        assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism + 2
+        assert partition_clustering_violations(df).count() == 0
+        assert _file_spread(df) == 1
+        assert df.count() == 120_000
+    finally:
+        restore()
+
+
+def test_read_clustered_pruned_read_splits_no_file(spark, tmp_path):
+    """A ``conv_bucket`` filter prunes the scan to one bucket: the split
+    size Spark derives from the SELECTED bytes must still cover that
+    bucket's multi-row-group file whole, under a hostile caller session."""
+    from featureengineer_spark.sources.io import read_clustered
+
+    path = str(tmp_path / "bucket_store")
+    df = spark.range(100_000).select(
+        (F.col("id") % 6).cast("string").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.sha2(F.col("id").cast("string"), 256).alias("text"),
+        F.timestamp_seconds(F.lit(1_704_067_200) + F.col("id") % 3600).alias("ts"),
+    )
+    df = df.repartition(4, F.pmod(F.xxhash64("conv_id"), F.lit(4)))
+    spark.conf.set("parquet.block.size", str(64 * 1024))
+    try:
+        write_transcripts_partitioned(df, path, conv_buckets=4)
+    finally:
+        spark.conf.unset("parquet.block.size")
+    restore = _hostile_split_confs(spark)
+    try:
+        for b in range(4):
+            pruned = read_clustered(spark, path).filter(F.col("conv_bucket") == b)
+            if pruned.limit(1).count():
+                assert pruned.rdd.getNumPartitions() == 1, b
+                assert _file_spread(pruned) == 1, b
+    finally:
+        restore()
+
+
+def test_read_clustered_uri_roots(spark, tmp_path):
+    """``file://`` and ``file:`` roots get the same whole-file splits as a
+    bare path (they are listed through Hadoop's FileSystem API), and a
+    root with no data file raises instead of reading under the caller's
+    split confs."""
+    import pytest
+
+    from featureengineer_spark.sources.io import read_clustered
+    from featureengineer_spark.validation import partition_clustering_violations
+
+    path = str(tmp_path / "uri_store")
+    (
+        spark.range(60_000)
+        .select(
+            (F.col("id") % 2).cast("string").alias("conv_id"),
+            F.col("id").cast("int").alias("turn_idx"),
+            F.sha2(F.col("id").cast("string"), 256).alias("text"),
+        )
+        .repartition(2, "conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.option("parquet.block.size", 64 * 1024)
+        .parquet(path)
+    )
+    (tmp_path / "empty_root").mkdir()
+    restore = _hostile_split_confs(spark)
+    try:
+        bare = read_clustered(spark, path)
+        for root in ("file://" + path, "file:" + path):
+            df = read_clustered(spark, root)
+            assert df.rdd.getNumPartitions() == bare.rdd.getNumPartitions(), root
+            assert partition_clustering_violations(df).count() == 0, root
+            assert df.schema == bare.schema
+        with pytest.raises(FileNotFoundError):
+            read_clustered(spark, "file://" + str(tmp_path / "empty_root"))
+    finally:
+        restore()
+
+
+def test_read_clustered_schema_memo(spark, tmp_path, monkeypatch):
+    """A second read of unchanged files takes its schema from the memo
+    (no inference) and gets the same schema; a rewrite of the files
+    misses the memo."""
+    from featureengineer_spark.sources import io
+
+    path = str(tmp_path / "memo_store")
+    spark.range(100).selectExpr("CAST(id AS STRING) AS conv_id", "id AS x").write.parquet(path)
+    first = io.read_clustered(spark, path).schema
+    n = len(io._SCHEMA_MEMO)
+    seen = []
+    orig_schema = type(spark.read).schema
+
+    def spy(self, schema):
+        seen.append(schema)
+        return orig_schema(self, schema)
+
+    monkeypatch.setattr(type(spark.read), "schema", spy)
+    assert io.read_clustered(spark, path).schema == first
+    assert len(seen) == 1 and len(io._SCHEMA_MEMO) == n
+    spark.range(100).selectExpr("CAST(id AS STRING) AS conv_id", "CAST(id AS DOUBLE) AS x").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert dict(io.read_clustered(spark, path).dtypes)["x"] == "double"
+    assert len(seen) == 1
