@@ -3,17 +3,20 @@
 The reference's only dedup is key-based ``drop_duplicates``
 (``PrepareData.py:647-658``); a transcript/training-data engine needs the
 full ladder: exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine
-near-dup. Everything below is DataFrame ops (explode → hash → agg →
-bucket join) plus one vectorized Arrow/numpy kernel for LSH pair
-emission — zero per-row Python — so each stage is shuffle-bounded and
-scales linearly with corpus size; candidate generation is LSH-bucketed
-so the quadratic pair space is never materialized.
+near-dup. Everything below is DataFrame ops (explode → hash → agg) plus
+ONE vectorized Arrow/numpy kernel that every pair generator shares
+(:func:`_bucket_pairs`: one exchange on the bucket key, in-bucket pair
+enumeration and scoring, partial + final aggregation) — zero per-row
+Python — so each stage is shuffle-bounded and scales linearly with
+corpus size; candidate generation is bucketed so the quadratic pair
+space is never materialized.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
@@ -97,7 +100,7 @@ def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> Dat
     cleaning passes strip boilerplate-only pages) would otherwise emit
     the single shingle "" — giving every empty doc an IDENTICAL minhash
     signature, which collapses the whole empty class into one LSH
-    bucket and turns the candidate self-join quadratic (measured: 20k
+    bucket and turns candidate pairing quadratic (measured: 20k
     post-cleaning-empty docs at a 200k-doc curation run -> 3.2e9 join
     rows). Under Jaccard an empty set is similar to nothing, so the
     correct candidate set for empty docs is empty; exact dedup remains
@@ -130,11 +133,14 @@ def _seeded_hash(seed_val: int, col: F.Column, hash_fn: str) -> F.Column:
 #: safe) and replays exactly in DuckDB.
 MINHASH_PRIME = 2_147_483_647
 
-#: Max candidate pairs materialized at once inside the LSH pair kernel —
-#: bounds a task's numpy working set (~2M pairs x ~(16 B of indices +
-#: 2 x num_perm x 4 B of gathered signatures) ≈ 1 GB peak at num_perm=64)
-#: regardless of bucket skew; a giant bucket streams through in blocks.
-_PAIR_BLOCK = 1 << 21
+#: Working-set budget of one pair block inside the in-bucket pair kernel,
+#: in BYTES. A block holds ~96 B of index, id, count and sort arrays per
+#: pair plus both sides' gathered payload rows, so the kernel
+#: materializes budget / (96 + 2 x payload row bytes) pairs at once —
+#: ~1.8M for a num_perm=64 signature, ~0.9M for a 64-double vector,
+#: ~11M with no payload — regardless of bucket skew; a giant bucket
+#: streams through in blocks.
+_PAIR_BLOCK = 1 << 30
 
 
 def minhash_perm_coeffs(num_perm: int, seed: int):
@@ -327,216 +333,132 @@ def near_dedup_incremental(
     return within.join(colliders, on=id_col, how="left_anti")
 
 
+def _pair_kernel(n_keys: int, score=None, max_bucket=None, pair_block=None):
+    """The ``mapInArrow`` function behind :func:`_bucket_pairs`: Arrow
+    batches of (id, key…, payload…) rows, every bucket wholly inside the
+    partition, → partial (id_a, id_b, __cnt[, __score]) batches.
 
-def _self_join_sides(frame, a_name: str = "a", b_name: str = "b"):
-    """Alias a corpus-scale frame for a candidate-pair self-join, with a
-    sort-merge hint on both sides. Static size estimates through the
-    upstream aggregations are unreliable (a banded/shingled frame can be
-    estimated KB-small while actually being GB-large), and a
-    mis-broadcast of a corpus-scale side stalls the driver for minutes —
-    measured at the 200k-doc curation-ladder rung, where the banded
-    frame (3M rows x ~550 B) was broadcast under a collapsed estimate.
-    The merge hint removes the static broadcast decision; AQE still
-    converts back to a broadcast join AT RUNTIME from the actual shuffle
-    sizes, so small corpora keep the fast plan."""
-    return frame.hint("merge").alias(a_name), frame.hint("merge").alias(b_name)
+    ``score(payload, ri, rj)`` maps the payload numpy arrays and two row
+    index arrays to (per-pair score, keep mask or None); the score is
+    max-reduced per pair, the count summed. ``max_bucket`` skips buckets
+    holding more rows. Block sizes derive from the byte budget
+    ``_PAIR_BLOCK`` read here, when the plan is built; ``pair_block``
+    caps the pairs per block further."""
+    budget = _PAIR_BLOCK
 
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle: int = 3,
-    seed: int = 42,
-    hash_fn: str = "xxhash64",
-    pair_block: int = _PAIR_BLOCK,
-) -> DataFrame:
-    """Near-duplicate candidate pairs via banded LSH on MinHash.
-
-    Signature split into ``bands`` bands of ``num_perm/bands`` rows;
-    docs sharing any band bucket become a candidate pair. The self-join
-    is on (band_idx, band_hash) — buckets are small, so the join output
-    approximates the true near-dup pair set, not n² pairs. Returns
-    (id_a, id_b, n_shared_bands, est_jaccard) with id_a < id_b;
-    est_jaccard is the fraction of matching minhash positions.
-    ``hash_fn='md5'`` makes the whole candidate set DuckDB-reproducible.
-    """
-    sig = minhash_signatures(df, id_col, text_col, num_perm, shingle, seed, hash_fn)
-    # Every minhash value is < 2^31-1 (mod-P universal hash), so the
-    # transport copy of the signature can ride the bucket shuffle as
-    # array<int> — half the bytes of the array<long> original (guide
-    # §2.3: narrower types). Equality comparisons below are unaffected
-    # (lossless cast), and the operator's output schema carries no
-    # signature column.
-    sig = sig.withColumn("minhash", F.col("minhash").cast("array<int>"))
-    banded = _banded_rows(
-        sig, id_col, num_perm, bands, hash_fn, extra_cols=("minhash",)
-    )
-
-    # Bucket-partitioned pair generation instead of a banded self-join:
-    # the self-join evaluated the whole shingle->signature->banding
-    # subtree TWICE (lambda-bearing subtrees never canonicalize equal,
-    # so the exchange is not reused) and carried the 8*num_perm-byte
-    # minhash array through two shuffles plus two sorts. Here each band
-    # row crosses ONE exchange (hash by bucket key — every bucket lands
-    # wholly in one partition), a vectorized Arrow kernel enumerates the
-    # in-bucket pairs and computes the per-pair position-match count in
-    # numpy (the interpreted HOF zip_with re-counted it once per shared
-    # band — measured 1.2 s of pure redundancy at the bench corpus), and
-    # the kernel partial-aggregates pairs per partition so the final
-    # exchange carries ~|unique pairs| scalar rows (guide §2.3/§8:
-    # decide with small rows, move heavy bytes once). Whole-operator
-    # wall at the 200k-doc bench corpus: 18.3 s (round-6 self-join) ->
-    # 3.9 s, identical output at every step (exceptAll both ways = 0).
-    # Null-id rows are dropped up front: the SQL forms never paired them
-    # (NULL comparisons are filtered), and the kernel's value compares
-    # need them gone.
-    import numpy as np
-    from pyspark.sql import types as T
-
-    id_type = df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("__cnt", T.LongType()),
-            T.StructField("__match", T.IntegerType()),
-        ]
-    )
-
-    def pair_kernel(batches):
+    def kernel(batches):
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        ids_parts, mh_parts, bi_parts, bh_parts = [], [], [], []
-        id_arrow_type = None
-        for batch in batches:
-            if id_arrow_type is None:
-                id_arrow_type = batch.schema.field(0).type
-            ids_parts.append(batch.column(0))
-            mh_parts.append(
-                batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            )
-            bi_parts.append(
-                batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            bh_parts.append(
-                batch.column(3).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-        if not ids_parts:
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
             return
-        ids = pa.concat_arrays(ids_parts).to_numpy(zero_copy_only=False)
-        if len(ids) == 0:  # only zero-row batches: reshape(0, -1) would raise
-            return
-        mh = np.concatenate(mh_parts).reshape(len(ids), -1)
-        bi = np.concatenate(bi_parts)
-        bh = np.concatenate(bh_parts)
-        # group the partition's rows by bucket (cheaper than asking the
-        # exchange for a sort: one lexsort over ~|partition| rows)
-        order = np.lexsort((bh, bi))
-        bi, bh, ids, mh = bi[order], bh[order], ids[order], mh[order]
-        new_b = np.empty(len(bi), dtype=bool)
+        tbl = pa.Table.from_batches(batches)
+        cols = [tbl.column(i).combine_chunks() for i in range(tbl.num_columns)]
+        # Ids become dense ranks: integer compares and sorts, in the id
+        # type's own order (strings by UTF-8 bytes), mapped back on emit.
+        uniq = pc.unique(cols[0])
+        uniq = uniq.take(pc.array_sort_indices(uniq))
+        code = pc.index_in(cols[0], value_set=uniq).to_numpy().astype(np.int64)
+        payload = [
+            c.flatten().to_numpy(zero_copy_only=False).reshape(len(c), -1)
+            if pa.types.is_list(c.type)
+            else c.to_numpy(zero_copy_only=False)
+            for c in cols[1 + n_keys :]
+        ]
+        row_bytes = sum(p.itemsize * (p.size // max(len(p), 1)) for p in payload)
+        block = max(1, budget // (96 + 2 * row_bytes))
+        if pair_block is not None:
+            block = min(block, pair_block)
+        # Group the partition's rows by bucket: one lexsort over the key
+        # columns' dictionary codes (exact for any key type).
+        keys = [
+            c.dictionary_encode().indices.to_numpy().astype(np.int64)
+            for c in cols[1 : 1 + n_keys]
+        ]
+        order = np.lexsort(keys)
+        code = code[order]
+        new_b = np.zeros(len(order), dtype=bool)
         new_b[0] = True
-        new_b[1:] = (bi[1:] != bi[:-1]) | (bh[1:] != bh[:-1])
+        for k in keys:
+            k = k[order]
+            new_b[1:] |= k[1:] != k[:-1]
         starts = np.flatnonzero(new_b)
-        sizes = np.diff(np.append(starts, len(bi)))
+        sizes = np.diff(np.append(starts, len(order)))
+
+        def merge(a, b, vals):
+            """Collapse duplicate (a, b) pairs: counts summed, score max'd."""
+            po = np.lexsort((b, a))
+            a, b, vals = a[po], b[po], [v[po] for v in vals]
+            nb = np.ones(len(a), dtype=bool)
+            nb[1:] = (a[1:] != a[:-1]) | (b[1:] != b[:-1])
+            st = np.flatnonzero(nb)
+            red = (np.add, np.maximum)
+            return a[st], b[st], [r.reduceat(v, st) for r, v in zip(red, vals)]
 
         def block_partial(ri, rj):
-            """(row_i, row_j) index block -> compact partial arrays
-            (id_a, id_b, cnt, max_match): orient each pair id_a < id_b
-            (same strict inequality as the join form — equal-id row
-            pairs are dropped, not emitted), count matching minhash
-            positions, collapse within-block duplicates."""
-            va, vb = ids[ri], ids[rj]
-            swap = va > vb
-            a = np.where(swap, vb, va)
-            b2 = np.where(swap, va, vb)
-            keep = a != b2
-            a, b2, ri, rj = a[keep], b2[keep], ri[keep], rj[keep]
+            """(row_i, row_j) sorted-position pairs → compact partial:
+            oriented id_a < id_b, equal ids dropped (the strict
+            inequality the SQL forms used), scored, merged."""
+            a, b = code[ri], code[rj]
+            keep = a != b
+            ri, rj, a, b = ri[keep], rj[keep], a[keep], b[keep]
+            vals = [np.ones(len(a), dtype=np.int64)]
+            if score is not None and len(a):
+                s, ok = score(payload, order[ri], order[rj])
+                if ok is not None:
+                    a, b, s, vals[0] = a[ok], b[ok], s[ok], vals[0][ok]
+                vals.append(s)
             if len(a) == 0:
                 return None
-            match = (mh[ri] == mh[rj]).sum(axis=1).astype(np.int32)
-            return _pair_merge(a, b2, np.ones(len(a), dtype=np.int64), match)
+            return merge(np.minimum(a, b), np.maximum(a, b), vals)
 
-        def _pair_merge(a, b2, cnt, match):
-            po = np.lexsort((b2, a))
-            a, b2, cnt, match = a[po], b2[po], cnt[po], match[po]
-            nb = np.empty(len(a), dtype=bool)
-            nb[0] = True
-            nb[1:] = (a[1:] != a[:-1]) | (b2[1:] != b2[:-1])
-            st = np.flatnonzero(nb)
-            return (
-                a[st],
-                b2[st],
-                np.add.reduceat(cnt, st),
-                np.maximum.reduceat(match, st),
-            )
-
-        # Bounded-memory accumulation: per-block compact partials pool in
-        # `pending` and are consolidated (one more merge-by-pair) before
-        # yielding, so a normal partition still emits ONE fully deduped
-        # batch like the unblocked kernel, while a pathological giant
-        # bucket (thousands of exact-identical band hashes) flushes every
-        # ~pair_block accumulated pairs — it degrades to the old join
-        # form's quadratic OUTPUT streaming into the (spilling)
-        # downstream aggregation, never to an unbounded task-memory
-        # spike. Duplicates escaping across flush boundaries are merged
-        # by the final groupBy.
+        # Bounded-memory accumulation: block partials pool in `pending`
+        # and are merged once more before yielding, so a normal partition
+        # emits ONE deduplicated batch, while a giant bucket flushes every
+        # ~block pairs into the (spilling) final aggregation instead of
+        # growing task memory. Pairs split across flushes are merged by
+        # the final groupBy.
         pending: list = []
-        pend_rows = 0
 
         def flush():
-            nonlocal pending, pend_rows
-            if not pending:
-                return None
             if len(pending) == 1:
-                a, b2, cnt, mm = pending[0]
+                a, b, vals = pending[0]
             else:
-                a, b2, cnt, mm = _pair_merge(
+                a, b, vals = merge(
                     np.concatenate([p[0] for p in pending]),
                     np.concatenate([p[1] for p in pending]),
-                    np.concatenate([p[2] for p in pending]),
-                    np.concatenate([p[3] for p in pending]),
+                    [np.concatenate(v) for v in zip(*(p[2] for p in pending))],
                 )
-            pending = []
-            pend_rows = 0
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(a, type=id_arrow_type),
-                    pa.array(b2, type=id_arrow_type),
-                    pa.array(cnt, type=pa.int64()),
-                    pa.array(mm, type=pa.int32()),
-                ],
-                names=["id_a", "id_b", "__cnt", "__match"],
-            )
+            pending.clear()
+            arrays = [uniq.take(pa.array(a)), uniq.take(pa.array(b))]
+            arrays += [pa.array(v) for v in vals]
+            names = ["id_a", "id_b", "__cnt", "__score"][: len(arrays)]
+            return pa.RecordBatch.from_arrays(arrays, names=names)
 
         def add(part):
-            nonlocal pend_rows
-            if part is None:
-                return None
-            pending.append(part)
-            pend_rows += len(part[0])
-            if pend_rows >= pair_block:
-                return flush()
+            if part is not None:
+                pending.append(part)
+                if sum(len(p[0]) for p in pending) >= block:
+                    return flush()
             return None
 
-        # Ragged triangular pair enumeration in BOUNDED blocks: at most
-        # ~pair_block pairs are materialized (index/gather arrays) at a
-        # time. Normal buckets: all size-k buckets emit their k(k-1)/2
-        # pairs through one broadcasted index expression, batched so
-        # that bucket-count x pairs-per-bucket stays under the block
-        # size; a giant bucket streams its anchor rows in blocks (row i
-        # pairs with every j > i of the same bucket).
+        # Ragged triangular pair enumeration in BOUNDED blocks of at most
+        # ~block pairs (index and gather arrays). All size-k buckets emit
+        # their k(k-1)/2 pairs through one broadcast index expression,
+        # batched so that buckets x pairs-per-bucket stays under the
+        # block; a giant bucket streams its anchor rows in blocks (row i
+        # pairs with every later row of the bucket).
         for k in np.unique(sizes):
-            if k < 2:
+            if k < 2 or (max_bucket is not None and k > max_bucket):
                 continue
             sel = starts[sizes == k]
             k = int(k)
             p = k * (k - 1) // 2
-            if p <= pair_block:
+            if p <= block:
                 iu, ju = np.triu_indices(k, 1)
-                per = max(1, pair_block // p)
+                per = max(1, block // p)
                 for s0 in range(0, len(sel), per):
                     ss = sel[s0 : s0 + per]
                     out = add(
@@ -548,7 +470,7 @@ def minhash_lsh_candidates(
                     if out is not None:
                         yield out
             else:
-                blk = max(1, pair_block // (k - 1))
+                blk = max(1, block // (k - 1))
                 for s in sel:
                     for i0 in range(0, k - 1, blk):
                         idx = np.arange(i0, min(i0 + blk, k - 1))
@@ -564,27 +486,146 @@ def minhash_lsh_candidates(
                         out = add(block_partial(int(s) + ri, int(s) + rj))
                         if out is not None:
                             yield out
-        out = flush()
-        if out is not None:
-            yield out
+        if pending:
+            yield flush()
 
-    pair_parts = (
-        banded.filter(F.col(id_col).isNotNull())
-        .select(id_col, "minhash", "band_idx", "band_hash")
-        .repartition("band_idx", "band_hash")
-        .mapInArrow(pair_kernel, schema=out_schema)
-    )
-    # __match is identical for every shared bucket of a pair (same two
-    # signature arrays); max() is the deterministic pick. est_jaccard =
-    # matching minhash positions / num_perm, exactly as the join form
-    # computed it.
+    return kernel
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    id_col: str,
+    keys: list[str],
+    payload: list[str] = (),
+    score=None,
+    score_type=None,
+    max_bucket: int | None = None,
+    pair_block: int | None = None,
+    clustered: bool = False,
+) -> DataFrame:
+    """The in-bucket pair primitive behind every near-dup pair generator:
+    rows sharing a bucket key pair up, (id_a, id_b, n[, score]) out with
+    id_a < id_b, ``n`` the number of (row_a, row_b) bucket co-occurrences
+    and ``score`` the max of the kernel's per-pair score.
+
+    One exchange hashes the rows by ``keys`` (every bucket lands wholly
+    in one partition), one vectorized Arrow kernel enumerates and scores
+    the in-bucket pairs and partial-aggregates them per partition, and
+    one groupBy finishes — each row crosses ONE shuffle with its payload,
+    and only ~|unique pairs| scalar rows cross the second (the partial +
+    final aggregation shape). A generator-level SQL self-join instead
+    evaluated the exploded subtree on both join sides and sorted both.
+    NULL ids and NULL keys never pair (the SQL forms filtered NULL
+    comparisons), nor do equal ids. ``clustered`` says the rows already
+    arrive clustered by ``keys`` (a window partitioned by them was their
+    last exchange), so no repartition is added."""
+    id_type = rows.schema[id_col].dataType
+    fields = [
+        T.StructField("id_a", id_type),
+        T.StructField("id_b", id_type),
+        T.StructField("__cnt", T.LongType()),
+    ]
+    aggs = [F.sum("__cnt").alias("n")]
+    if score is not None:
+        fields.append(T.StructField("__score", score_type))
+        aggs.append(F.max("__score").alias("score"))
+    kernel = _pair_kernel(len(keys), score, max_bucket, pair_block)
+    rows = rows.dropna(subset=[id_col, *keys]).select(id_col, *keys, *payload)
     return (
-        pair_parts.groupBy("id_a", "id_b")
-        .agg(F.sum("__cnt").alias("n_shared_bands"), F.max("__match").alias("__m"))
-        .select(
-            "id_a", "id_b", "n_shared_bands",
-            (F.col("__m") / F.lit(num_perm)).alias("est_jaccard"),
+        (rows if clustered else rows.repartition(*keys))
+        .mapInArrow(kernel, schema=T.StructType(fields))
+        .groupBy("id_a", "id_b")
+        .agg(*aggs)
+    )
+
+
+def _match_count(payload, ri, rj):
+    """Matching MinHash signature positions per pair."""
+    sig = payload[0]
+    return (sig[ri] == sig[rj]).sum(axis=1).astype("int32"), None
+
+
+def _hamming_within(max_hamming: int):
+    """SimHash hamming distance per pair, kept when ≤ ``max_hamming``."""
+
+    def score(payload, ri, rj):
+        import numpy as np
+
+        x = (payload[0][ri] ^ payload[0][rj]).view(np.uint64)
+        # SWAR popcount (numpy < 2 has no bitwise_count)
+        x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+        x = (x & np.uint64(0x3333333333333333)) + (
+            (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
         )
+        x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+        h = ((x * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(np.int32)
+        return h, h <= max_hamming
+
+    return score
+
+
+def _cosine_at_least(threshold: float):
+    """Cosine per pair from (vector, norm) payload, kept when ≥
+    ``threshold``. The dot product is the left fold from 0.0 that
+    Spark's ``aggregate(zip_with(a, b, x * y), 0D, acc + x)`` computes —
+    element products in the vector's own type, sums in double, same
+    order — so scores are bit-identical to the SQL form."""
+
+    def score(payload, ri, rj):
+        import numpy as np
+
+        vec, norm = payload
+        dot = np.zeros(len(ri))
+        for d in range(vec.shape[1]):
+            dot = dot + vec[ri, d] * vec[rj, d]
+        cos = dot / (norm[ri] * norm[rj])
+        return cos, cos >= threshold
+
+    return score
+
+
+def minhash_lsh_candidates(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_perm: int = 64,
+    bands: int = 16,
+    shingle: int = 3,
+    seed: int = 42,
+    hash_fn: str = "xxhash64",
+    pair_block: int | None = None,
+) -> DataFrame:
+    """Near-duplicate candidate pairs via banded LSH on MinHash.
+
+    Signature split into ``bands`` bands of ``num_perm/bands`` rows;
+    docs sharing any band bucket become a candidate pair. Pairs come
+    from the in-bucket pair kernel keyed on (band_idx, band_hash) —
+    buckets are small, so the output approximates the true near-dup
+    pair set, not n² pairs. Returns (id_a, id_b, n_shared_bands,
+    est_jaccard) with id_a < id_b; est_jaccard is the fraction of
+    matching minhash positions. ``hash_fn='md5'`` makes the whole
+    candidate set DuckDB-reproducible. ``pair_block`` caps the pairs the
+    kernel materializes at once (default: sized from ``_PAIR_BLOCK``).
+    """
+    sig = minhash_signatures(df, id_col, text_col, num_perm, shingle, seed, hash_fn)
+    # Every minhash value is < 2^31-1 (mod-P universal hash), so the
+    # transport copy of the signature can ride the bucket shuffle as
+    # array<int> — half the bytes of the array<long> original (guide
+    # §2.3: narrower types); equality compares are unaffected.
+    sig = sig.withColumn("minhash", F.col("minhash").cast("array<int>"))
+    banded = _banded_rows(
+        sig, id_col, num_perm, bands, hash_fn, extra_cols=("minhash",)
+    )
+    # The position-match count is computed once per pair in numpy (an
+    # interpreted zip_with re-counted it once per shared band); it is the
+    # same for every shared bucket of a pair, so max() is a pick.
+    pairs = _bucket_pairs(
+        banded, id_col, ["band_idx", "band_hash"], ["minhash"],
+        _match_count, T.IntegerType(), pair_block=pair_block,
+    )
+    return pairs.select(
+        "id_a", "id_b", F.col("n").alias("n_shared_bands"),
+        (F.col("score") / F.lit(num_perm)).alias("est_jaccard"),
     )
 
 
@@ -644,8 +685,9 @@ def simhash_near_dups(
     """SimHash near-dup pairs with hamming distance ≤ ``max_hamming``.
 
     Pigeonhole blocking: split the 64-bit hash into ``blocks`` chunks; two
-    hashes within hamming d < blocks must agree on ≥1 chunk, so the
-    self-join is on (chunk_idx, chunk_value) buckets — never n².
+    hashes within hamming d < blocks must agree on ≥1 chunk, so pairs
+    come from the in-bucket pair kernel keyed on (chunk_idx, chunk_value)
+    — never n² — which scores and filters the hamming distance in place.
 
     The guarantee requires ``max_hamming < blocks``: by default blocks is
     derived as ``max_hamming + 1`` (full recall); passing a smaller
@@ -662,44 +704,44 @@ def simhash_near_dups(
         )
     sh = simhash(df, id_col, text_col, hash_fn=hash_fn)
     width = 64 // blocks
-    mask = (1 << width) - 1
-    chunked = sh.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk_idx"),
-                        F.shiftrightunsigned("simhash", i * width).bitwiseAND(F.lit(mask)).alias("chunk_val"),
-                    )
-                    for i in range(blocks)
-                ]
-            )
-        ).alias("c"),
-    ).select(id_col, "simhash", "c.chunk_idx", "c.chunk_val")
-    a, b = _self_join_sides(chunked)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("__sa"),
-            F.col("b.simhash").alias("__sb"),
-        )
-        .distinct()
+    mask = (1 << width) - 1 if width < 64 else -1  # -1: all 64 bits, as a BIGINT
+    chunks = ", ".join(
+        f"struct({i} AS chunk_idx,"
+        f" shiftrightunsigned(simhash, {i * width}) & {mask} AS chunk_val)"
+        for i in range(blocks)
     )
-    hamming = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))
-    return (
-        pairs.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    chunked = sh.select(id_col, "simhash", F.expr(f"inline(array({chunks}))"))
+    pairs = _bucket_pairs(
+        chunked, id_col, ["chunk_idx", "chunk_val"], ["simhash"],
+        _hamming_within(max_hamming), T.IntegerType(),
     )
+    return pairs.select("id_a", "id_b", F.col("score").alias("hamming"))
+
+
+def _shingle_overlaps(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_shingle_df: int | None
+) -> DataFrame:
+    """(id_a, id_b, __inter, __na, __nb) for every doc pair sharing ≥1
+    n-gram shingle: |A∩B| from the in-bucket pair kernel keyed on the
+    shingle (an inverted index), the per-doc shingle counts |A|, |B|
+    joined on. ``max_shingle_df`` drops shingles held by more rows than
+    the cap BEFORE pairing (standard stop-shingle practice: a shingle
+    shared by m docs contributes O(m²) pairs, so one stop phrase across a
+    large corpus is otherwise a single-task bomb); the sizes count the
+    capped sets too. ``None`` disables the cap."""
+    sh = _exploded_shingles(df, id_col, text_col, n)
+    capped = max_shingle_df is not None
+    if capped:
+        # The window counting each shingle's rows also clusters the rows
+        # by shingle, so the pair kernel needs no exchange of its own.
+        dfreq = F.count("*").over(Window.partitionBy("__sh"))
+        sh = sh.withColumn("__df", dfreq).filter(F.col("__df") <= max_shingle_df)
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__n"))
+    inter = _bucket_pairs(sh, id_col, ["__sh"], clustered=capped)
+    inter = inter.withColumnRenamed("n", "__inter")
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -712,45 +754,19 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
 
-    inverted-index self-join: explode distinct shingles, join on shingle,
-    count intersections, then |A∪B| = |A|+|B|−|A∩B|. Output
-    (id_a, id_b, jaccard ≥ threshold).
-
-    ``max_shingle_df`` drops shingles whose document frequency exceeds the
-    cap BEFORE the self-join (standard stop-shingle practice): a shingle
-    shared by m docs contributes O(m²) join rows, so one stop phrase
-    across a large corpus is otherwise a single-reducer bomb. Jaccard is
-    then computed over the capped shingle sets on both the intersection
-    AND size sides (consistent definition). ``None`` disables the cap.
+    Inverted index on the distinct shingles: the in-bucket pair kernel
+    counts intersections per pair, then |A∪B| = |A|+|B|−|A∩B|. Output
+    (id_a, id_b, jaccard ≥ threshold). ``max_shingle_df`` is the
+    stop-shingle cap (see :func:`_shingle_overlaps`): Jaccard is computed
+    over the capped shingle sets on both the intersection AND size sides
+    (consistent definition). ``None`` disables the cap.
     """
-    sh = _exploded_shingles(df, id_col, text_col, n)
-    if max_shingle_df is not None:
-        dfreq = sh.groupBy("__sh").agg(F.count("*").alias("__df"))
-        keep = dfreq.filter(F.col("__df") <= max_shingle_df).select("__sh")
-        sh = sh.join(keep, on="__sh", how="inner")
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__n"))
-    a, b = _self_join_sides(sh)
-    inter = (
-        a.join(
-            b,
-            (F.col("a.__sh") == F.col("b.__sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("__inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
-    j = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter")),
-        )
+    inter, na, nb = F.col("__inter"), F.col("__na"), F.col("__nb")
+    return (
+        _shingle_overlaps(df, id_col, text_col, n, max_shingle_df)
+        .select("id_a", "id_b", (inter / (na + nb - inter)).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    return j.select("id_a", "id_b", "jaccard")
 
 
 def near_dup_clusters(
@@ -852,9 +868,9 @@ def embedding_near_dups(
 
     Default path is LSH-bucketed: vectors are hashed into ``n_tables``
     OR'd random-hyperplane tables (``similarity.hyperplane_tables``), the
-    self-join runs on (table, bucket) — never n² — and exact cosine is
-    verified within buckets (no false positives; the approximation is
-    recall-only).
+    in-bucket pair kernel pairs vectors on (table, bucket) — never n² —
+    and verifies exact cosine within buckets (no false positives; the
+    approximation is recall-only).
 
     BEHAVIOR CHANGE vs the first release: the default used to be the
     exact brute-force cartesian; it is now approximate. The default table
@@ -863,51 +879,33 @@ def embedding_near_dups(
     0.43, so 12 OR'd tables give per-pair recall ≈ 1−0.57¹² ≈ 0.9987.
     Pairs closer to the threshold from above are missed slightly more
     often; raise ``n_tables`` (linear candidate cost) to tighten.
-    ``n_planes=None`` restores the exact brute-force cartesian (test /
-    small-corpus baseline only — quadratic).
+    ``n_planes=None`` puts every vector in ONE bucket — the exact
+    brute-force all-pairs baseline (test / small-corpus only, quadratic),
+    scored by the same kernel formula as the LSH path.
+
+    The vector dimension is read from the first vector with a non-zero
+    norm; a vector of any other length never pairs (its SQL cosine would
+    be NULL). No such vector: an empty result with the usual schema.
     """
-    norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
+    norm = F.expr(f"sqrt(aggregate(`{vec_col}`, 0D, (acc, x) -> acc + x * x))")
     e = emb.select(
         F.col(id_col), F.col(vec_col), norm.alias("__norm")
     ).filter(F.col("__norm") > 0)
-
-    def _flat(joined):
-        return joined.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("__va"),
-            F.col(f"b.{vec_col}").alias("__vb"),
-            F.col("a.__norm").alias("__na"),
-            F.col("b.__norm").alias("__nb"),
-        )
-
-    if n_planes is None:
-        a, b = e.alias("a"), e.alias("b")
-        cand = _flat(a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+    first = e.select(vec_col).first()
+    dim = len(first[0]) if first is not None else 0
+    e = e.filter(F.size(vec_col) == dim)
+    if n_planes is None or first is None:
+        keyed, keys = e.withColumn("__all", F.lit(0)), ["__all"]
     else:
         from featureengineer_spark.operators.similarity import hyperplane_tables
 
-        dim = len(emb.select(vec_col).first()[0])
-        tab = hyperplane_tables(e, dim, n_planes, n_tables, vec_col, seed)
-        a, b = _self_join_sides(tab)
-        cand = _flat(
-            a.join(
-                b,
-                (F.col("a.table_idx") == F.col("b.table_idx"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-        ).dropDuplicates(["id_a", "id_b"])
-
-    dot = F.aggregate(
-        F.zip_with("__va", "__vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+        keyed = hyperplane_tables(e, dim, n_planes, n_tables, vec_col, seed)
+        keys = ["table_idx", "bucket"]
+    pairs = _bucket_pairs(
+        keyed, id_col, keys, [vec_col, "__norm"],
+        _cosine_at_least(threshold), T.DoubleType(),
     )
-    return (
-        cand.select(
-            "id_a", "id_b", (dot / (F.col("__na") * F.col("__nb"))).alias("cosine")
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return pairs.select("id_a", "id_b", F.col("score").alias("cosine"))
 
 
 def near_dedup_filter(
@@ -973,45 +971,23 @@ def ngram_containment_pairs(
     Jaccard but containment 1.0; the standard signal for excerpt
     duplication and quotation laundering in training corpora).
 
-    Same inverted-index machinery and stop-shingle df cap as
+    Same shingle overlaps and stop-shingle df cap as
     :func:`ngram_jaccard_pairs` (cap applied consistently to both the
     intersection and the size sides). Emits (id_a, id_b, containment_a,
     containment_b, jaccard) for pairs whose LARGER directional
     containment clears ``threshold``; id_a < id_b."""
-    sh = _exploded_shingles(df, id_col, text_col, n)
-    if max_shingle_df is not None:
-        dfreq = sh.groupBy("__sh").agg(F.count("*").alias("__df"))
-        keep = dfreq.filter(F.col("__df") <= max_shingle_df).select("__sh")
-        sh = sh.join(keep, on="__sh", how="inner")
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__n"))
-    a, b = _self_join_sides(sh)
-    inter = (
-        a.join(
-            b,
-            (F.col("a.__sh") == F.col("b.__sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("__inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
-    out = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+    inter, na, nb = F.col("__inter"), F.col("__na"), F.col("__nb")
+    return (
+        _shingle_overlaps(df, id_col, text_col, n, max_shingle_df)
         .select(
             "id_a",
             "id_b",
-            (F.col("__inter") / F.col("__na")).alias("containment_a"),
-            (F.col("__inter") / F.col("__nb")).alias("containment_b"),
-            (
-                F.col("__inter")
-                / (F.col("__na") + F.col("__nb") - F.col("__inter"))
-            ).alias("jaccard"),
+            (inter / na).alias("containment_a"),
+            (inter / nb).alias("containment_b"),
+            (inter / (na + nb - inter)).alias("jaccard"),
         )
         .filter(F.greatest("containment_a", "containment_b") >= threshold)
     )
-    return out
 
 
 def dedup_conversations(

@@ -171,14 +171,26 @@ def hyperplane_signature(
     vectors share a bucket iff they agree on the sign of all ``n_planes``
     projections; collision probability rises with cosine similarity.
     """
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    acc = F.lit(0).cast("long")
-    for i in range(n_planes):
-        lit_plane = F.array(*[F.lit(float(v)) for v in planes[i]])
-        bit = F.when(_dot(vec_col, lit_plane) >= 0, F.lit(1).cast("long")).otherwise(0)
-        acc = acc + bit * (2 ** i)
-    return df.withColumn(out_col, acc)
+    return df.withColumn(out_col, F.expr(_signature_sql(dim, n_planes, vec_col, seed)))
+
+
+def _signature_sql(dim: int, n_planes: int, vec_col: str, seed: int) -> str:
+    """SQL for the SRP bucket id: bit i set iff the plane-i dot product
+    (a left fold from 0.0 over the element products, as ``_dot``) is
+    ≥ 0; a NULL dot leaves the bit clear. One parsed expression with the
+    coefficients as DOUBLE literals (``repr`` round-trips every double
+    exactly), not a Column per coefficient: those cost ~16k driver->JVM
+    round trips per ``hyperplane_tables`` build at dim 64 x 48 planes."""
+    planes = np.random.default_rng(seed).standard_normal((n_planes, dim))
+    bits = []
+    for i, plane in enumerate(planes):
+        coeffs = ", ".join(f"{float(v)!r}D" for v in plane)
+        dot = (
+            f"aggregate(zip_with(`{vec_col}`, array({coeffs}), (x, y) -> x * y),"
+            " 0D, (acc, x) -> acc + x)"
+        )
+        bits.append(f"CASE WHEN {dot} >= 0 THEN {1 << i}L ELSE 0L END")
+    return " + ".join(["0L", *bits])
 
 
 def train_kmeans(
@@ -489,24 +501,11 @@ def hyperplane_tables(
     bit of one signature is lost); with T OR'd tables the miss
     probability decays as (1−pⁿ)ᵀ. Output is exploded long-form so the
     candidate join is a plain equi join on (table_idx, bucket)."""
-    out = df
-    for t in range(n_tables):
-        out = hyperplane_signature(
-            out, dim, n_planes, vec_col, seed + 1013 * t, out_col=f"__b{t}"
-        )
-    return out.select(
-        *df.columns,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("table_idx"), F.col(f"__b{t}").alias("bucket")
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("__tb"),
-    ).select(*df.columns, "__tb.table_idx", "__tb.bucket")
+    tables = ", ".join(
+        f"struct({t} AS table_idx, {_signature_sql(dim, n_planes, vec_col, seed + 1013 * t)} AS bucket)"
+        for t in range(n_tables)
+    )
+    return df.select("*", F.expr(f"inline(array({tables}))"))
 
 
 def ann_topk_lsh(

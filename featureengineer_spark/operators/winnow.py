@@ -19,9 +19,9 @@ window function over one sort, no Python, and replayable verbatim in
 DuckDB (md5-prefix hashes, see ``dedup._md5_long``).
 
 Scale shape: fingerprinting is one per-doc sort (partitioned by id —
-parallel over docs); pair detection is an inverted-index equi-join on
-the fingerprint hash with a hot-hash cap (``max_df``), never a
-cross-join. Positions are packed into 22 bits — documents beyond 2^22
+parallel over docs); pair detection is the shared in-bucket pair
+kernel keyed on the fingerprint hash (an inverted index) with a
+hot-hash cap (``max_df``), never a cross-join. Positions are packed into 22 bits — documents beyond 2^22
 k-grams (~4M words) should be pre-chunked (``curation.with_chunks``).
 """
 
@@ -107,34 +107,21 @@ def winnow_pairs(
     (id_a, id_b, n_shared, overlap) with id_a < id_b and
     ``overlap = n_shared / min(|fp_a|, |fp_b|)``.
 
-    Inverted index on ``fp_hash``; hashes present in more than
-    ``max_df`` documents (ubiquitous boilerplate grams) are dropped
-    BEFORE the self-join, so no hot key can quadratically explode a
-    bucket — the same discipline as the MinHash band join.
+    Inverted index on ``fp_hash`` through the in-bucket pair kernel;
+    hashes present in more than ``max_df`` documents (ubiquitous
+    boilerplate grams) are skipped inside the kernel — the rows are
+    distinct (id, fp_hash), so a bucket's row count IS the hash's
+    document frequency — so no hot key can quadratically explode a
+    bucket. ``|fp|`` counts every print, hot ones included.
     """
+    from featureengineer_spark.operators.dedup import _bucket_pairs
+
     fps = winnow_fingerprints(
         df, id_col=id_col, text_col=text_col, k=k, w=w
     ).select(F.col(id_col), "fp_hash").distinct()
     sizes = fps.groupBy(id_col).agg(F.count("*").alias("__nfp"))
-    df_counts = fps.groupBy("fp_hash").agg(
-        F.countDistinct(id_col).alias("__df")
-    )
-    rare = fps.join(
-        df_counts.filter(F.col("__df") <= max_df).select("fp_hash"),
-        on="fp_hash",
-        how="inner",
-    )
-    from featureengineer_spark.operators.dedup import _self_join_sides
-
-    ra, rb = _self_join_sides(rare)
-    a = ra.select(F.col("fp_hash"), F.col(id_col).alias("id_a"))
-    b = rb.select(F.col("fp_hash"), F.col(id_col).alias("id_b"))
-    pairs = (
-        a.join(b, on="fp_hash")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    pairs = _bucket_pairs(fps, id_col, ["fp_hash"], max_bucket=max_df).filter(
+        F.col("n") >= min_shared
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__nfp").alias("__na"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__nfp").alias("__nb"))
@@ -144,9 +131,9 @@ def winnow_pairs(
         .select(
             "id_a",
             "id_b",
-            "n_shared",
+            F.col("n").alias("n_shared"),
             F.round(
-                F.col("n_shared") / F.least(F.col("__na"), F.col("__nb")), 6
+                F.col("n") / F.least(F.col("__na"), F.col("__nb")), 6
             ).alias("overlap"),
         )
     )

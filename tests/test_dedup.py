@@ -789,35 +789,32 @@ def test_minhash_lsh_candidates_giant_bucket_blocked_path(spark):
 
 
 
-def test_minhash_pair_kernel_zero_row_batches(spark, monkeypatch):
-    """The in-bucket pair kernel must emit nothing, not raise, when a
-    partition hands it only zero-row Arrow batches."""
+def test_pair_kernel_zero_row_batches():
+    """The shared in-bucket pair kernel must emit nothing, not raise,
+    when a partition hands it only zero-row Arrow batches (or none) —
+    with a list payload and a score, and with neither."""
     import pyarrow as pa
 
-    from featureengineer_spark.operators.dedup import minhash_lsh_candidates
+    from featureengineer_spark.operators.dedup import _match_count, _pair_kernel
 
-    kernels = []
-    cls = type(spark.range(1))
-    orig = cls.mapInArrow
-
-    def capturing(self, func, schema, *a, **k):
-        kernels.append(func)
-        return orig(self, func, schema, *a, **k)
-
-    monkeypatch.setattr(cls, "mapInArrow", capturing)
-    df = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
-    minhash_lsh_candidates(df, num_perm=16, bands=4)
-    (pair_kernel,) = kernels
     empty = pa.RecordBatch.from_arrays(
         [
             pa.array([], pa.int64()),
-            pa.array([], pa.list_(pa.int32())),
             pa.array([], pa.int32()),
             pa.array([], pa.int64()),
+            pa.array([], pa.list_(pa.int32())),
         ],
-        names=["doc_id", "minhash", "band_idx", "__band_hash"],
+        names=["doc_id", "band_idx", "band_hash", "minhash"],
     )
-    assert list(pair_kernel(iter([empty, empty]))) == []
+    kernel = _pair_kernel(2, _match_count)
+    assert list(kernel(iter([empty, empty]))) == []
+    assert list(kernel(iter([]))) == []
+    bare = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.string()), pa.array([], pa.string())],
+        names=["doc_id", "__sh"],
+    )
+    assert list(_pair_kernel(1)(iter([bare]))) == []
+
 
 def test_minhash_plan_build_round_trips_flat_in_num_perm(spark, monkeypatch):
     """Building the MinHash + banding plan costs driver->JVM round trips
@@ -853,6 +850,68 @@ def test_minhash_plan_build_round_trips_flat_in_num_perm(spark, monkeypatch):
     trips(16)  # one-off lookups (class and function resolution)
     small, large = trips(16), trips(128)
     assert large <= small + 8, (small, large)
+
+
+def test_hyperplane_plan_build_round_trips_flat_in_dim(spark, monkeypatch):
+    """Building the hyperplane-LSH bucketing plan costs driver->JVM round
+    trips that do not grow with the vector dimension, planes or tables:
+    a Column per plane coefficient cost ~16k Py4J commands (2-3 s) per
+    ``hyperplane_tables`` build at dim 64 x 8 planes x 6 tables, paid by
+    every embedding_near_dups call and twice by ann_topk_lsh."""
+    from py4j import protocol
+
+    from featureengineer_spark.operators.similarity import hyperplane_tables
+
+    df = spark.createDataFrame([(1, [1.0, 2.0])], "vec_id long, embedding array<double>")
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    sent = {"n": 0}
+
+    def counting(command, *args, **kwargs):
+        # object-release commands follow Python's GC, not the plan build
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent["n"] += 1
+        return orig(command, *args, **kwargs)
+
+    def trips(dim, n_planes, n_tables):
+        sent["n"] = 0
+        hyperplane_tables(df, dim, n_planes, n_tables)
+        return sent["n"]
+
+    monkeypatch.setattr(client, "send_command", counting)
+    trips(4, 2, 1)  # one-off lookups (class and function resolution)
+    small, large = trips(4, 2, 1), trips(64, 8, 6)
+    assert large <= small + 8, (small, large)
+
+
+def test_embedding_near_dups_edge_inputs(spark):
+    """No vector at all gives an empty result with the usual schema, and
+    a NULL (or zero) first vector does not hide the dimension: both
+    paths then score the remaining vectors exactly as without it."""
+    from featureengineer_spark.operators.dedup import embedding_near_dups
+
+    schema = "vec_id long, embedding array<double>"
+    empty = embedding_near_dups(spark.createDataFrame([], schema))
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == "struct<id_a:bigint,id_b:bigint,cosine:double>"
+    nulls = spark.createDataFrame([(1, None), (2, [0.0, 0.0])], schema)
+    assert embedding_near_dups(nulls).collect() == []
+
+    good = [(3, [1.0, 0.0, 0.5]), (4, [1.0, 0.01, 0.5]), (5, [0.0, 1.0, 0.0])]
+    ref = {
+        (r.id_a, r.id_b): r.cosine
+        for r in embedding_near_dups(
+            spark.createDataFrame(good, schema), threshold=0.9, n_planes=None
+        ).collect()
+    }
+    assert list(ref) == [(3, 4)]
+    df = spark.createDataFrame([(1, None), (2, [0.0, 0.0, 0.0]), *good], schema).coalesce(1)
+    for n_planes in (None, 8):
+        got = {
+            (r.id_a, r.id_b): r.cosine
+            for r in embedding_near_dups(df, threshold=0.9, n_planes=n_planes).collect()
+        }
+        assert got == ref, n_planes
 
 
 # Edge documents for the pinned signatures: empty, punctuation only,
@@ -893,3 +952,212 @@ def test_minhash_signatures_and_bands_pinned(spark, hash_fn, num_perm, bands, sh
         list(r) for r in _banded_rows(sig, "doc_id", num_perm, bands, hash_fn).collect()
     )
     assert got_bands == want["band_rows"]
+
+
+# ---------------------------------------------------------------------------
+# The in-bucket pair kernel behind every near-dup pair generator, checked
+# against brute-force Python oracles on one small corpus.
+
+PAIR_WORDS = [f"v{i:03d}" for i in range(300)]
+PREAMBLE = "common preamble words here "
+
+
+@pytest.fixture(scope="module")
+def pair_corpus(spark):
+    """76 rows: 8 near-dup families of 5 under string ids whose UTF-8
+    byte order differs from UTF-16 order ("\\uffe0…" < "\\U0001F600…"),
+    two duplicate ids (a second row with another family's text and
+    vector), two NULL-id copies of paired rows, an empty and a NULL
+    document (zero and NULL vectors), a preamble shared by every text
+    (capped stop shingles, hot prints) and 30 identical documents — one
+    giant bucket in every generator."""
+    rng = np.random.default_rng(23)
+    rows = []
+    prefixes = ["a", "Z", "é", "￠", "\U0001F600", "m", "中", "0"]
+    for fam, pre in enumerate(prefixes):
+        base = list(rng.choice(PAIR_WORDS, size=24, replace=False))
+        center = rng.standard_normal(16)
+        for v in range(5):
+            words = base.copy()
+            words[2 + 3 * v] = f"x{fam}y{v}"
+            vec = (center + rng.standard_normal(16) * 0.05).tolist()
+            rows.append((f"{pre}{v}", PREAMBLE + " ".join(words), vec))
+    giant_text = PREAMBLE + " ".join(rng.choice(PAIR_WORDS, size=20))
+    giant_vec = rng.standard_normal(16).tolist()
+    rows += [(f"g{i:02d}", giant_text, giant_vec) for i in range(30)]
+    rows += [("a1", rows[7][1], rows[7][2]), ("m3", rows[12][1], rows[12][2])]
+    rows += [(None, rows[0][1], rows[0][2]), (None, giant_text, giant_vec)]
+    rows += [("e0", "", [0.0] * 16), ("e1", None, None)]
+    schema = "doc_id string, text string, embedding array<double>"
+    return spark.createDataFrame(rows, schema).repartition(3).cache()
+
+
+def _row_pairs(groups, max_group=None):
+    """Count (id_a < id_b) row pairs over groups of ids, as the kernel does
+    for one bucket each: equal ids never pair."""
+    import itertools
+    from collections import Counter
+
+    out = Counter()
+    for ids in groups:
+        if max_group is not None and len(ids) > max_group:
+            continue
+        for x, y in itertools.combinations(ids, 2):
+            if x != y:
+                out[(min(x, y), max(x, y))] += 1
+    return out
+
+
+def _simhash_case(corpus):
+    from featureengineer_spark.operators.dedup import simhash, simhash_near_dups
+
+    sig = {r.doc_id: r.simhash for r in simhash(corpus).collect() if r.doc_id}
+    want = {}
+    for key in _row_pairs([sorted(sig)]):
+        h = bin(sig[key[0]] ^ sig[key[1]]).count("1")
+        if h <= 8:
+            want[key] = (h,)
+    return lambda: simhash_near_dups(corpus, max_hamming=8), want, 0.0
+
+
+def _shingle_overlap_oracle(corpus, cap):
+    from collections import Counter, defaultdict
+
+    from featureengineer_spark.operators.dedup import _exploded_shingles
+
+    rows = [(r[0], r[1]) for r in _exploded_shingles(corpus, "doc_id", "text", 3).collect()]
+    dfreq = Counter(s for _, s in rows)
+    kept = [(i, s) for i, s in rows if dfreq[s] <= cap and i is not None]
+    size = Counter(i for i, _ in kept)
+    by_sh = defaultdict(list)
+    for i, s in kept:
+        by_sh[s].append(i)
+    return _row_pairs(by_sh.values()), size
+
+
+def _jaccard_case(corpus):
+    from featureengineer_spark.operators.dedup import ngram_jaccard_pairs
+
+    inter, size = _shingle_overlap_oracle(corpus, 60)
+    want = {}
+    for (a, b), i in inter.items():
+        j = i / (size[a] + size[b] - i)
+        if j >= 0.3:
+            want[(a, b)] = (j,)
+    return (
+        lambda: ngram_jaccard_pairs(corpus, n=3, threshold=0.3, max_shingle_df=60),
+        want,
+        0.0,
+    )
+
+
+def _containment_case(corpus):
+    from featureengineer_spark.operators.dedup import ngram_containment_pairs
+
+    inter, size = _shingle_overlap_oracle(corpus, 60)
+    want = {}
+    for (a, b), i in inter.items():
+        ca, cb = i / size[a], i / size[b]
+        if max(ca, cb) >= 0.5:
+            want[(a, b)] = (ca, cb, i / (size[a] + size[b] - i))
+    return (
+        lambda: ngram_containment_pairs(corpus, n=3, threshold=0.5, max_shingle_df=60),
+        want,
+        0.0,
+    )
+
+
+def _embedding_case(corpus):
+    import itertools
+    import math
+
+    from featureengineer_spark.operators.dedup import embedding_near_dups
+
+    def fold(x, y):
+        acc = 0.0
+        for p, q in zip(x, y):
+            acc += p * q
+        return acc
+
+    vecs = [
+        (r.doc_id, list(r.embedding), math.sqrt(fold(r.embedding, r.embedding)))
+        for r in corpus.collect()
+        if r.doc_id is not None and r.embedding is not None
+    ]
+    want = {}
+    for (x, vx, nx), (y, vy, ny) in itertools.combinations(vecs, 2):
+        if x == y or nx == 0 or ny == 0:
+            continue
+        cos = fold(vx, vy) / (nx * ny)
+        key = (min(x, y), max(x, y))
+        if cos >= 0.9 and cos > want.get(key, (-2.0,))[0]:
+            want[key] = (cos,)
+    return (
+        lambda: embedding_near_dups(
+            corpus, id_col="doc_id", threshold=0.9, n_planes=None
+        ),
+        want,
+        0.0,
+    )
+
+
+def _winnow_case(corpus):
+    from collections import Counter, defaultdict
+
+    from featureengineer_spark.operators.winnow import winnow_fingerprints, winnow_pairs
+
+    fps = {
+        (r.doc_id, r.fp_hash)
+        for r in winnow_fingerprints(corpus, k=3, w=4).collect()
+        if r.doc_id is not None
+    }
+    size = Counter(i for i, _ in fps)
+    by_hash = defaultdict(list)
+    for i, h in fps:
+        by_hash[h].append(i)
+    want = {
+        (a, b): (n, n / min(size[a], size[b]))
+        for (a, b), n in _row_pairs(by_hash.values(), max_group=40).items()
+        if n >= 2
+    }
+    return (
+        lambda: winnow_pairs(corpus, k=3, w=4, min_shared=2, max_df=40),
+        want,
+        5e-7,  # overlap is rounded to 6 places
+    )
+
+
+def test_simhash_near_dups_radius_zero(pair_corpus):
+    """max_hamming=0 (one 64-bit block) pairs exactly the equal
+    signatures; its all-ones chunk mask used to overflow BIGINT."""
+    from featureengineer_spark.operators.dedup import simhash, simhash_near_dups
+
+    sig = {r.doc_id: r.simhash for r in simhash(pair_corpus).collect() if r.doc_id}
+    want = {(a, b, 0) for a, b in _row_pairs([sorted(sig)]) if sig[a] == sig[b]}
+    got = {tuple(r) for r in simhash_near_dups(pair_corpus, max_hamming=0).collect()}
+    assert got == want and len(want) >= 435
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_simhash_case, _jaccard_case, _containment_case, _embedding_case, _winnow_case],
+    ids=["simhash", "ngram_jaccard", "ngram_containment", "embedding", "winnow"],
+)
+def test_pair_generators_match_bruteforce_oracle(pair_corpus, monkeypatch, case):
+    """Every generator on the shared in-bucket pair kernel equals its
+    brute-force Python oracle — pair set, orientation (id_a < id_b in
+    UTF-8 byte order), NULL ids never paired, equal ids never paired,
+    duplicate-id rows counted like the SQL join counted them — both with
+    the default block budget and with a budget small enough that the
+    giant bucket streams through the blocked path."""
+    from featureengineer_spark.operators import dedup
+
+    build, want, atol = case(pair_corpus)
+    assert ("g00", "g29") in want and len(want) > 435
+    for budget in (None, 4096):
+        if budget is not None:
+            monkeypatch.setattr(dedup, "_PAIR_BLOCK", budget)
+        got = {(r[0], r[1]): tuple(r[2:]) for r in build().collect()}
+        assert got.keys() == want.keys(), (budget, got.keys() ^ want.keys())
+        for key, vals in want.items():
+            np.testing.assert_allclose(got[key], vals, rtol=1e-12, atol=atol)

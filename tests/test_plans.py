@@ -164,15 +164,21 @@ def test_round4_doc_operators_never_cartesian(spark):
     """The round-4 document-pipeline operators must stay equi-join
     shaped: near-dup removal, contamination overlap, and the minhash
     candidate chain produce no CartesianProduct/BroadcastNestedLoopJoin
-    at any plan node."""
+    at any plan node. Every near-dup pair generator runs on the one
+    in-bucket pair kernel: exactly one MapInArrow node and no
+    SortMergeJoin (no self-join) in its plan."""
     from pyspark.sql import functions as F
 
     from featureengineer_spark.operators.dedup import (
+        embedding_near_dups,
         minhash_lsh_candidates,
         near_dedup_filter,
+        ngram_containment_pairs,
         ngram_jaccard_pairs,
+        simhash_near_dups,
     )
     from featureengineer_spark.operators.textstats import contamination_overlap
+    from featureengineer_spark.operators.winnow import winnow_pairs
 
     docs = spark.createDataFrame(
         [(i, f"some text body number {i % 9} with padding words") for i in range(60)],
@@ -181,6 +187,18 @@ def test_round4_doc_operators_never_cartesian(spark):
     bench = docs.filter(F.col("doc_id") % 7 == 0).select(
         F.col("doc_id").alias("bench_doc_id"), "text"
     )
+    emb = docs.select(
+        F.col("doc_id").alias("vec_id"),
+        F.expr("transform(sequence(0, 7), j -> cos(doc_id % 9 + j))").alias("embedding"),
+    )
+    generators = {
+        "minhash": minhash_lsh_candidates(docs),
+        "ngram_jaccard": ngram_jaccard_pairs(docs, n=3, threshold=0.4),
+        "simhash": simhash_near_dups(docs),
+        "ngram_containment": ngram_containment_pairs(docs),
+        "embedding": embedding_near_dups(emb, threshold=0.9),
+        "winnow": winnow_pairs(docs),
+    }
     plans = {
         "near_dedup_filter": near_dedup_filter(
             docs, ngram_jaccard_pairs(docs, n=3, threshold=0.4)
@@ -188,12 +206,15 @@ def test_round4_doc_operators_never_cartesian(spark):
         "contamination": contamination_overlap(
             docs, bench, bench_id_col="bench_doc_id", n=4
         ),
-        "minhash": minhash_lsh_candidates(docs),
+        **generators,
     }
     for name, df in plans.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
+        if name in generators:
+            assert plan.count("MapInArrow") == 1, (name, plan)
+            assert "SortMergeJoin" not in plan, (name, plan)
 
 
 def test_round5_curation_operator_plans(spark):
